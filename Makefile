@@ -1,6 +1,6 @@
 PY ?= python
 
-.PHONY: test parity bench scaling dist clean
+.PHONY: test parity bench perf scaling dist clean
 
 test:
 	$(PY) -m pytest tests/ -x -q
@@ -10,6 +10,12 @@ parity:
 
 bench:
 	$(PY) bench.py
+
+# the benchmark's own tests, then one untraced pass of each workload
+perf:
+	$(PY) -m pytest perfbench/tests -q
+	python3 perfbench/run.py --workload crawl_warm --seed 1 --seconds 5 --trace 0
+	python3 perfbench/run.py --workload query_suite --seed 1 --seconds 5 --trace 0
 
 scaling:
 	$(PY) scripts/bench_scaling.py 4 16 3

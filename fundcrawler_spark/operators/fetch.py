@@ -1,12 +1,16 @@
-"""Fetch kernel — applyInPandas batch fetcher over host-salt groups.
+"""Fetch kernel — mapInPandas batch fetcher, one Python task per core.
 
 The reference fetches on a thread pool inside a child process
-(http_request_downloader.py:116-175); our equivalent is one Arrow batch
-per (host, host_salt) group handled by a Python worker. Grouping by
-(host, host_salt) — not just host — is the skew fix: the eastmoney case
-is ONE host owning the whole admitted set, and the salt fans its queue
-across min(n_salts, executors) tasks while the AIMD budget still caps
-total admission per host.
+(http_request_downloader.py:116-175); our equivalent is one Python
+worker per core, each fetching its hash-partitioned slice of the
+admitted rows. Partitioning by url_hash — not by host — is the skew
+fix: the eastmoney case is ONE host owning the whole admitted set, and
+the hash spreads its rows evenly over the cores while the AIMD budget
+still caps total admission per host.
+
+Every Python task costs a fixed worker tax (PySpark re-scans its
+zipped library on each task), so the stage runs at most one task per
+core and never more tasks than rows.
 
 The transport is injected as a module-level callable name so the
 closure stays picklable and tests/bench swap implementations without
@@ -15,19 +19,10 @@ touching the plan.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import FETCHED_SCHEMA
-
-
-# Batch granularity for the fetch fan-out: the reference runs ~5 fetch
-# threads per core inside its child process (cpu*5 task budget,
-# rate_control.py:30), so ~5 rows per Spark task is the equivalent
-# latency-hiding unit — finer only adds task-scheduling + Python-worker
-# round-trips per wave.
-FETCH_ROWS_PER_TASK = 5
 
 
 def run_fetch(
@@ -43,9 +38,9 @@ def run_fetch(
     ``wave`` stamps the rows with the wave the fetch HAPPENS in (the
     frontier row's own wave column is its enqueue wave).
     ``expected_rows``: caller's upper bound on the admitted count (the
-    wave loop knows the per-host budgets); sizes the fan-out so a
-    budget-bounded wave doesn't schedule 4x-cores mostly-empty
-    applyInPandas tasks. None = unknown = assume big.
+    wave loop knows the per-host budgets); caps the partition count so
+    a small wave schedules no more Python tasks than rows. None = unknown =
+    one partition per core.
     ``transport``: 'stub' (deterministic offline, the test/bench
     default) or 'http' (live urllib GETs, sources/http_transport) —
     resolved by module name inside the kernel so the closure stays
@@ -57,40 +52,26 @@ def run_fetch(
     else:
         raise ValueError(f"unknown transport {transport!r}")
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return fetch_pandas_batch(pdf, fail_rate, max_fail_attempts, discover)
+    def kernel(batches):
+        for pdf in batches:
+            yield fetch_pandas_batch(pdf, fail_rate, max_fail_attempts, discover)
 
-    # Physical grouping is the kernel's own choice — politeness was
-    # enforced upstream, so the fetch batches just need to be (a) even
-    # and (b) plentiful. Two pitfalls this code avoids explicitly:
-    #   * AQE coalesces shuffle partitions by BYTE size, but this
-    #     stage's cost is python compute per row — a small admitted set
-    #     would collapse to 1-2 partitions and run nearly serially; a
-    #     user-specified repartition count is exempt from coalescing.
-    #   * the frontier's host_salt has only n_salts values per host —
-    #     hashing few group keys into many partitions leaves empty and
-    #     double-loaded partitions (straggler tail), so the kernel
-    #     re-salts finely off url_hash.
-    spark = admitted.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism * 4
+    # A user-specified repartition count is exempt from AQE's byte-size
+    # coalescing, which would otherwise collapse this compute-bound
+    # stage's few small rows onto 1-2 partitions.
+    parallelism = admitted.sparkSession.sparkContext.defaultParallelism
     if expected_rows is not None:
-        parallelism = max(1, min(parallelism, -(-int(expected_rows) // FETCH_ROWS_PER_TASK)))
-    fine = F.pmod(F.xxhash64("url_hash"), F.lit(parallelism * 16)).cast("int")
+        parallelism = max(1, min(parallelism, int(expected_rows)))
     # host_rank (admission rank from politeness.admit) rides through the
     # kernel when present so the crawl-order window downstream needs no
     # broadcast re-join of the admitted ranks (one fewer per-wave job)
-    cols = [
-        "url", "url_hash", "host", "host_salt", "page_type",
-        "seed_index", "retry_count", "wave",
-    ]
+    cols = ["url", "url_hash", "host", "page_type", "seed_index", "retry_count", "wave"]
     if "host_rank" in admitted.columns:
         cols.append("host_rank")
     fetched = (
         admitted.select(*cols)
-        .withColumn("fetch_salt", fine)
-        .repartition(parallelism, "host", "fetch_salt")
-        .groupBy("host", "fetch_salt")
-        .applyInPandas(fn, FETCHED_SCHEMA)
+        .repartition(parallelism, "url_hash")
+        .mapInPandas(kernel, FETCHED_SCHEMA)
     )
     if "host_rank" not in admitted.columns:
         # stub_transport zero-fills host_rank when the input lacks ranks;

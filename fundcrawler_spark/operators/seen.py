@@ -235,7 +235,11 @@ class SeenSet:
         self.fpr = fpr
 
     def empty_shards(self) -> DataFrame:
-        return self.spark.createDataFrame([], SEEN_SHARDS_SCHEMA)
+        # over a zero-partition RDD: createDataFrame([]) would spread the
+        # empty list over defaultParallelism Python tasks on every action
+        return self.spark.createDataFrame(
+            self.spark.sparkContext.emptyRDD(), SEEN_SHARDS_SCHEMA
+        )
 
     def shard_col(self, url_hash_col):
         return F.pmod(url_hash_col, F.lit(self.n_shards)).cast("int")

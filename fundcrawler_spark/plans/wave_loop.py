@@ -7,7 +7,7 @@ Each wave is one Spark job chain:
 
     cand     = frontier (robots-filtered)
     admitted = per-host AIMD budget window         (politeness.admit)
-    fetched  = applyInPandas fetch kernel          (fetch.run_fetch)
+    fetched  = mapInPandas fetch kernel            (fetch.run_fetch)
     frontier = (frontier - admitted) + failures    (anti-join + union)
     seen    += successful url hashes               (bloom shard insert)
     budgets  = AIMD update from wave counts        (plans.rate_control)
@@ -108,7 +108,10 @@ class CrawlConfig:
     # optional per-wave telemetry callback: receives one dict per wave
     # with phase wall times (refill / fetch+agg / discover-dedup /
     # checkpoint) and flags — used by scripts/bench_backlog.py to
-    # attribute wave-time outliers; None = zero overhead
+    # attribute wave-time outliers; None = zero overhead. The phase
+    # keys are serial and sum to wave_sec; a checkpoint wave's flush_*
+    # keys are per-thread spans, each timed from its own start, that
+    # may overlap one another
     wave_hook: object = None
 
     def __post_init__(self) -> None:
@@ -358,12 +361,10 @@ class Crawler:
                 self._reset_workdir()
             seeds.write.mode("overwrite").parquet(seeds_path)
             seeds = spark.read.parquet(seeds_path)
-            frontier0 = frontier_ops.seeds_to_frontier(seeds, cfg.n_salts)
+            # a fresh run starts from a clean workdir, so the seen set is
+            # empty and the seed frontier needs no probe-at-insert
+            frontier = robots_drop(frontier_ops.seeds_to_frontier(seeds, cfg.n_salts))
             shards = self.seen.empty_shards()
-            # probe-at-insert: drop URLs already in the seen set (no-op on
-            # an empty set; meaningful when seeding an existing crawl)
-            probed = self.seen.probe(shards, frontier0)
-            frontier = robots_drop(probed.filter(~F.col("seen")).drop("seen"))
             budgets = BudgetTable(max_num=float(cfg.max_budget), init_cur=cfg.init_budget)
             wave, order_offset = 0, 0
 
@@ -506,17 +507,19 @@ class Crawler:
             # serially they were two back-to-back sub-second
             # driver-synchronous chains per flush
             def _append_results() -> None:
+                t_a = time.time()
                 results_new = assemble_results(pool, seeds)
                 # interval-bounded rows; shrink from shuffle-partition
                 # count to pool-scale write tasks (same small-write
                 # rationale as the fetch_log flush)
                 self.results.append(results_new.coalesce(POOL_PARTITIONS))
-                flush_detail["flush_assemble_sec"] = round(time.time() - t0, 3)
+                flush_detail["flush_assemble_sec"] = round(time.time() - t_a, 3)
 
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=1) as res_pool:
                 fut_res = res_pool.submit(_append_results)
+                t_e = time.time()
                 # seeds completing this interval (bounded) leave the pool
                 done = (
                     pool.groupBy("seed_index")
@@ -527,7 +530,7 @@ class Crawler:
                 incomplete = pool.join(
                     F.broadcast(done), "seed_index", "left_anti"
                 ).localCheckpoint()
-                flush_detail["flush_pool_evict_sec"] = round(time.time() - t0, 3)
+                flush_detail["flush_pool_evict_sec"] = round(time.time() - t_e, 3)
                 fut_res.result()
             flush_detail["flush_results_sec"] = round(time.time() - t0, 3)
 

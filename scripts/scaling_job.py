@@ -10,7 +10,7 @@ identical input. Segments are grouped by plane:
   compute plane (scales with executors on a real cluster AND here):
     * jvm_frontier  — URL canonicalize + xxhash64 + host extract,
                       whole-stage-codegen, no exchange
-    * fetch_parse   — applyInPandas fetch kernel (image synthesis +
+    * fetch_parse   — mapInPandas fetch kernel (image synthesis +
                       encode) + the 10 regex projections
     * bloom_probe   — broadcast-mode seen-set probe (mapInPandas,
                       no shuffle of the candidate side)

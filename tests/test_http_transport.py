@@ -132,7 +132,6 @@ def test_run_fetch_http_transport_through_spark(spark, server):
     from fundcrawler_spark.operators.fetch import run_fetch
 
     pdf = _batch(server, [f"/ok?i={i}" for i in range(8)] + ["/blank"])
-    pdf["host_salt"] = list(range(len(pdf)))
     df = spark.createDataFrame(pdf)
     rows = run_fetch(df, wave=0, expected_rows=9, transport="http").collect()
     states = sorted(r["state"] for r in rows)

@@ -47,14 +47,27 @@ def test_cuckoo_insert_contains_delete():
 
 def test_distributed_probe_insert(spark):
     ss = SeenSet(spark, n_shards=4, capacity_per_shard=10_000)
-    cand = spark.range(0, 500).select(
-        (F.col("id") * 2654435761).cast("long").alias("url_hash")
-    )
+
+    def hashes(n):
+        return spark.range(0, n).select(
+            (F.col("id") * 2654435761).cast("long").alias("url_hash")
+        )
+
+    cand = hashes(500)
     shards = ss.empty_shards()
+    # zero partitions: an action over the empty set schedules no tasks
+    assert shards.rdd.getNumPartitions() == 0
     p0 = ss.probe(shards, cand)
     assert p0.filter(F.col("seen")).count() == 0
-    shards = ss.insert(shards, cand.limit(200))
+    shards = ss.insert(shards, hashes(200))
     assert shards.count() == 4
+    # inserting into the zero-partition set builds each shard's blob
+    # bit for bit like a local BloomShard over the same keys
+    keys = np.array([r["url_hash"] for r in hashes(200).collect()], dtype=np.int64)
+    for r in shards.collect():
+        local = BloomShard.sized(10_000)
+        local.insert(keys[keys % 4 == r["shard_id"]])
+        assert bytes(r["blob"]) == local.to_blob(), r["shard_id"]
     for mode in ("broadcast", "cogroup"):
         p1 = ss.probe(shards, cand, mode=mode)
         seen_n = p1.filter(F.col("seen")).count()

@@ -1,5 +1,5 @@
-"""Skew + sizing evidence: single-dominant-host salting actually
-spreads work, and bloom shards at 10^7-key scale behave."""
+"""Skew + sizing evidence: a single dominant host's fetch work actually
+spreads over the cores, and bloom shards at 10^7-key scale behave."""
 
 import time
 
@@ -16,7 +16,7 @@ from fundcrawler_spark.schemas import SEEDS_SCHEMA
 
 def test_single_host_fetch_spreads_over_partitions(spark):
     """The eastmoney case: ONE host owns the whole admitted set; the
-    row-level fetch salt must still spread it across many partitions."""
+    url_hash fetch partitioning must still spread it across many partitions."""
     seeds = spark.createDataFrame(fx.seed_rows(500), SEEDS_SCHEMA)
     frontier = seeds_to_frontier(seeds)
     hosts = [r["host"] for r in frontier.select("host").distinct().collect()]
@@ -58,29 +58,23 @@ def test_bloom_shard_at_ten_million_keys():
 
 
 def test_fetch_fanout_sized_by_expected_rows(spark):
-    """A budget-bounded wave must not schedule a 4x-cores fan-out of
-    mostly-empty Python tasks: with expected_rows=160 the fetch stage
-    runs ceil(160/5)=32 partitions (and still spreads the single host),
-    while the unsized default stays at 4x defaultParallelism."""
+    """The fetch stage runs one Python task per core and never more tasks
+    than rows: every Python task pays a fixed worker start-up tax, so a
+    budget-bounded wave of 160 rows runs min(defaultParallelism, 160)
+    partitions, a 3-row wave runs 3 (not a core count's worth), and both
+    fetch exactly the rows of the unsized default."""
     seeds = spark.createDataFrame(fx.seed_rows(500), SEEDS_SCHEMA)
     frontier = seeds_to_frontier(seeds)
-    admitted = admit(frontier, {"fundf10.eastmoney.com": 160}, 160)
-    sized = run_fetch(admitted, fail_rate=0.0, wave=0, expected_rows=160)
-    n_parts = sized.rdd.getNumPartitions()
-    # expectation mirrors run_fetch's sizing rule (min of the 4x-cores
-    # cap and ceil(rows/FETCH_ROWS_PER_TASK)) rather than hard-coding 32,
-    # so the test survives a conftest core-count change
-    from fundcrawler_spark.operators.fetch import FETCH_ROWS_PER_TASK
-    expected = min(
-        spark.sparkContext.defaultParallelism * 4,
-        -(-160 // FETCH_ROWS_PER_TASK),
-    )
-    assert n_parts == expected, (n_parts, expected)
-    rows_sized = {r["url_hash"] for r in sized.collect()}
-    rows_default = {
-        r["url_hash"] for r in run_fetch(admitted, fail_rate=0.0, wave=0).collect()
-    }
-    assert rows_sized == rows_default and len(rows_sized) == 160
+    cores = spark.sparkContext.defaultParallelism
+    for budget, expected in ((160, min(cores, 160)), (3, 3)):
+        admitted = admit(frontier, {"fundf10.eastmoney.com": budget}, budget)
+        sized = run_fetch(admitted, fail_rate=0.0, wave=0, expected_rows=budget)
+        assert sized.rdd.getNumPartitions() == expected, (budget, expected)
+        rows_sized = {r["url_hash"] for r in sized.collect()}
+        rows_default = {
+            r["url_hash"] for r in run_fetch(admitted, fail_rate=0.0, wave=0).collect()
+        }
+        assert rows_sized == rows_default and len(rows_sized) == budget
 
 
 def test_admit_literal_map_equals_broadcast_join(spark):
