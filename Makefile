@@ -1,6 +1,6 @@
 PY ?= python
 
-.PHONY: test parity bench perf scaling dist clean
+.PHONY: test parity bench perf scaling lines dist clean
 
 test:
 	$(PY) -m pytest tests/ -x -q
@@ -19,6 +19,10 @@ perf:
 
 scaling:
 	$(PY) scripts/bench_scaling.py 4 16 3
+
+# non-frozen package line count (the size the design aims to shrink)
+lines:
+	@find fundcrawler_spark -name '*.py' ! -name 'frozen_*' | xargs cat | wc -l
 
 # spark-submit packaging: zip the package for --py-files
 dist:

@@ -780,14 +780,9 @@ def q_retry_priority_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file yields only row-group-many scan tasks; hashing a unique key
     # spreads like round-robin but skips round-robin's mandatory local
     # pre-sort — sortBeforeRepartition, guide §2.5 — r7 A/B at sf1.0:
-    # med 2.16 s round-robin vs 1.37 s hash), then a SINGLE window: on Spark
-    # 3.5+/4 the planner inserts a map-side partial WindowGroupLimit
-    # before the exchange, so each task forwards <= 12 rows per host and
-    # the per-host reducer input is bounded at 12 x map-tasks of slim
-    # rows — the salted pre-phase duplicated exactly that bound and paid
-    # an extra exchange+sort for it (r7 A/B: salted 3.4-6.7 s, single
-    # 2.6 s at sf1.0). Rank values are identical (plan choice, not
-    # semantics — operators/topk.py salted=False contract).
+    # med 2.16 s round-robin vs 1.37 s hash), then grouped_topk's single
+    # window, whose map-side partial WindowGroupLimit forwards <= 12 rows
+    # per host from each task.
     fr = fr.repartition(spark.sparkContext.defaultParallelism, "uid")
     ranked = grouped_topk(
         fr,
@@ -796,7 +791,6 @@ def q_retry_priority_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
          F.col("seed_index").asc(), F.col("page_ordinal").asc(), F.col("uid").asc()],
         12,
         rank_col="rank",
-        salted=False,
     )
     return ranked.select("host", "rank", "uid")
 
@@ -3096,8 +3090,8 @@ def q_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and (b) a mergeable sketch (union two groups' samples, re-take the
 # bottom k) whose k-th value estimates distinct counts. Complements
 # the Bernoulli samplers (stratified/mixture give a RATE, this gives
-# an exact COUNT per group). Physical shape: operators/topk.grouped_topk
-# salted two-phase rank — no per-group single-reducer window.
+# an exact COUNT per group). Physical shape: operators/topk.grouped_topk,
+# whose map-side partial WindowGroupLimit bounds each lang's reducer.
 _BOTTOMK = 20
 
 

@@ -351,12 +351,3 @@ def html_rows(n: int) -> list[tuple[str, str]]:
 EASTMONEY_HOST = "fundf10.eastmoney.com"
 
 DEFAULT_ROBOTS = "User-agent: *\nDisallow: /private/\nAllow: /\n"
-
-
-def host_rows(cpus: int = 32) -> list[tuple[str, str, float, float]]:
-    # init 12 / cap cpu*5 mirror rate_control.py:19,30
-    return [
-        (EASTMONEY_HOST, DEFAULT_ROBOTS, 12.0, cpus * 5.0),
-        ("fund.eastmoney.com", DEFAULT_ROBOTS, 12.0, cpus * 5.0),
-        ("example-mirror.org", DEFAULT_ROBOTS, 12.0, cpus * 5.0),
-    ]

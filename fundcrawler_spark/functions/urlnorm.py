@@ -84,13 +84,14 @@ def url_hash(url_norm: Column) -> Column:
     return F.xxhash64(url_norm)
 
 
-def host_salt(host: Column, n_salts: int, row_key: Column | None = None) -> Column:
-    """Skew-killing salt: spreads ONE dominant host (the eastmoney case)
-    over ``n_salts`` sub-partitions for *queue management* while the
-    politeness budget still serializes *admission* per host (SURVEY.md
-    §4.2). The salt MUST vary within a host — ``row_key`` (normally the
-    canonical URL) is hashed together with the host; a host-only salt
-    would put the dominant host's whole queue back on one partition."""
+def host_salt(host: Column, n_buckets: int, row_key: Column | None = None) -> Column:
+    """Per-URL salt in ``[0, n_buckets)`` hashed from the host and
+    ``row_key`` (normally the canonical URL), or from the host alone.
+    The package no longer uses it — the frontier carries no salt column
+    and skew is handled by url_hash fetch partitioning plus the map-side
+    partial WindowGroupLimit of ``operators.topk.grouped_topk``. It stays
+    because the frozen ``bench.py`` and ``perfbench/wl_frontier.py``
+    import it to build their synthetic frontiers."""
     if row_key is None:
-        return F.pmod(F.xxhash64(host), F.lit(n_salts)).cast("int")
-    return F.pmod(F.xxhash64(host, row_key), F.lit(n_salts)).cast("int")
+        return F.pmod(F.xxhash64(host), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(host, row_key), F.lit(n_buckets)).cast("int")

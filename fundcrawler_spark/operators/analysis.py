@@ -66,12 +66,6 @@ def select_funds(result_df: DataFrame, as_of: str) -> DataFrame:
     cat = categorize(result_df, as_of)
 
     # stage 1: debt/other keep top-200 by sharpe (tie: fund_code asc).
-    # salted=False throughout: Spark 3.5+/4 plans a map-side partial
-    # WindowGroupLimit before the exchange, so each task already
-    # forwards <= K rows per category and the salted pre-phase would
-    # duplicate that bound at the cost of an extra exchange+sort per
-    # stage (r7 A/B: 1.2-1.6 s -> 0.9-1.1 s for the whole query at
-    # sf1.0; rank values identical — topk.py salted=False contract).
     debt_other = cat.filter(F.col("category") != "long")
     stage1 = grouped_topk(
         debt_other,
@@ -80,7 +74,6 @@ def select_funds(result_df: DataFrame, as_of: str) -> DataFrame:
         K_SHARPE_OTHER,
         tiebreak=["fund_code"],
         rank_col="sharpe_rank",
-        salted=False,
     ).drop("sharpe_rank")
 
     # stage 2: of those, top-5 (debt) / top-10 (other) by 3y increase
@@ -90,7 +83,6 @@ def select_funds(result_df: DataFrame, as_of: str) -> DataFrame:
         ["increase_3y_pct"],
         K_INC_OTHER,
         tiebreak=["fund_code"],
-        salted=False,
     ).filter(
         (F.col("category") == "other")
         | ((F.col("category") == "debt") & (F.col("rank") <= K_INC_DEBT))
@@ -103,7 +95,6 @@ def select_funds(result_df: DataFrame, as_of: str) -> DataFrame:
         ["increase_3y_pct"],
         K_LONG,
         tiebreak=["fund_code"],
-        salted=False,
     )
 
     out_cols = ["category", "rank", "fund_code", "sharpe_3y", "increase_3y_pct"]

@@ -349,7 +349,7 @@ def _gram3_sets(texts):
 
 def _band_keys(sig, bands: int, band_offset: int):
     """(n_docs, bands) int64 keys: uint64 splitmix chain over each
-    band's signature rows, salted by the global band index so keys from
+    band's signature rows, seeded with the global band index so keys from
     different bands/families never collide by construction."""
     import numpy as np
 

@@ -17,11 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.urlnorm import build_url, canonicalize_url, host_salt, url_hash, url_host
+from ..functions.urlnorm import build_url, canonicalize_url, url_hash, url_host
 from ..schemas import PAGE_TYPES
 
 
-def seeds_to_frontier(seeds: DataFrame, n_salts: int = 32) -> DataFrame:
+def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
     """seeds(fund_code, fund_name, seed_index) -> initial frontier: one
     row per (fund, page_type), FRONTIER_SCHEMA columns."""
     fan = seeds.select(
@@ -34,13 +34,12 @@ def seeds_to_frontier(seeds: DataFrame, n_salts: int = 32) -> DataFrame:
     df = (
         df.withColumn("url_hash", url_hash(F.col("url_norm")))
         .withColumn("host", url_host(F.col("url_norm")))
-        .withColumn("host_salt", host_salt(F.col("host"), n_salts, F.col("url_norm")))
         .withColumn("retry_count", F.lit(0).cast("int"))
         .withColumn("priority", F.col("seed_index"))
         .withColumn("wave", F.lit(0).cast("int"))
     )
     return df.select(
-        "url", "url_norm", "url_hash", "host", "host_salt",
+        "url", "url_norm", "url_hash", "host",
         "page_type", "seed_index", "retry_count", "priority", "wave",
     )
 
@@ -67,21 +66,14 @@ def requeue_failures(frontier_rest: DataFrame, fetched: DataFrame, next_wave: in
             (F.col("retry_count") + 1).alias("retry_count"),
         )
         .withColumn("url_norm", canonicalize_url(F.col("url")))
-        .withColumn("host_salt", host_salt(F.col("host"), 32, F.col("url_norm")))
         .withColumn("priority", F.col("seed_index"))
         .withColumn("wave", F.lit(next_wave).cast("int"))
         .select(
-            "url", "url_norm", "url_hash", "host", "host_salt",
+            "url", "url_norm", "url_hash", "host",
             "page_type", "seed_index", "retry_count", "priority", "wave",
         )
     )
     return frontier_rest.unionByName(requeued)
-
-
-def add_urls(frontier: DataFrame, new_urls: DataFrame) -> DataFrame:
-    """Frontier growth (recursive crawls): unionByName after dedup
-    against the frontier itself is the caller's job via SeenSet."""
-    return frontier.unionByName(new_urls.select(*frontier.columns))
 
 
 def with_priority_scores(

@@ -330,16 +330,6 @@ def phash_hamming(col_a, col_b):
     return F.bit_count(col_a.bitwiseXOR(col_b))
 
 
-def decode_stub_other_formats(data: bytes, fmt: str) -> np.ndarray:
-    """Plumbing stub for codecs absent in this container (jpeg/png/webp
-    decode would live here via Pillow). Kept explicit per the build
-    brief: the Spark-side plumbing is real; the codec is not."""
-    raise NotImplementedError(
-        f"codec '{fmt}' requires an image library not present in this "
-        "container; ppm/bmp/dctq are implemented in functions/imaging.py"
-    )
-
-
 def dhash_images(df: DataFrame) -> DataFrame:
     """(image_id, bytes) -> (image_id, w, h, dhash): decode each
     payload and compute the 64-bit difference hash

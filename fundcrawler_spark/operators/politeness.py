@@ -14,11 +14,9 @@ candidates within each host by the deterministic total order
 
 (retry-first mirrors http_request_downloader.py:162-166; the rest is
 our documented deterministic replacement for its LIFO race, SURVEY.md
-§4.4) and keep ``rank <= budget``. The rank is a single exact window:
-the planner's map-side partial WindowGroupLimit already bounds what one
-dominant host (eastmoney) can send to a reducer, so the salted
-two-phase pre-pass became pure overhead (r7 A/B; grouped_topk keeps the
-salted option for planners without that rewrite).
+§4.4) and keep ``rank <= budget``. The rank is a single exact window
+(``grouped_topk``): the planner's map-side partial WindowGroupLimit
+bounds what one dominant host (eastmoney) can send to a reducer.
 """
 
 from __future__ import annotations
@@ -188,7 +186,8 @@ def top_slice_keys(frontier: DataFrame, slice_k: int,
     the admission total order — the ACTIVE-SLICE selector for the wave
     loop's split frontier. Only the slim scheduling columns enter the
     rank shuffle; the slice is bounded (hosts x slice_k), so the caller
-    can broadcast the keys back onto the wide rows."""
+    can broadcast the keys back onto the wide rows. ``approx_rows`` is
+    accepted and ignored."""
     slim = with_page_ordinal(
         frontier.select("host", "retry_count", "priority", "seed_index",
                         "page_type", "url_hash")
@@ -199,8 +198,6 @@ def top_slice_keys(frontier: DataFrame, slice_k: int,
         admission_order(),
         max(slice_k, 1),
         rank_col="slice_rank",
-        salted=False,  # map-side WindowGroupLimit bounds the reducer
-                       # input; see the admit() plan-choice note (r7)
     )
     return ranked.select("url_hash")
 
@@ -213,12 +210,12 @@ def admit(frontier: DataFrame, budgets: dict[str, int], max_budget: int,
     columns (host, retry, priority, seed, ordinal, url_hash) — the wide
     frontier rows (urls are ~100s of bytes each) never enter the sort
     exchanges; the budget-bounded winner set is broadcast-joined back
-    onto the frontier at the end. Ranking is one exact window whose
-    map-side partial WindowGroupLimit bounds every reducer (see the
-    plan-choice note below). Hosts with budget 0 are pruned before any
-    shuffle. ``approx_rows`` is retained for caller compatibility (it
-    used to pick the salted pre-phase; the single-window plan now wins
-    at every measured size).
+    onto the frontier at the end. Ranking is one exact window: Spark
+    inserts a map-side partial WindowGroupLimit before the exchange, so
+    every task forwards <= max_budget rows per host and the per-host
+    reducer input is bounded at max_budget x map-tasks slim rows. Hosts
+    with budget 0 are pruned before any shuffle. ``approx_rows`` is
+    accepted and ignored.
     """
     spark = frontier.sparkSession
     b_items = [(h, int(b)) for h, b in budgets.items() if int(b) > 0]
@@ -247,23 +244,12 @@ def admit(frontier: DataFrame, budgets: dict[str, int], max_budget: int,
             .na.fill({"budget": 0})
             .filter(F.col("budget") > 0)
         )
-    # plan choice (r7): one exact window, always. Spark 3.5+/4 inserts
-    # a map-side partial WindowGroupLimit before the exchange, so every
-    # task forwards <= max_budget rows per host and the per-host
-    # reducer input is bounded at budget x map-tasks of slim scheduling
-    # rows — the salted pre-phase duplicated exactly that bound and
-    # paid an extra exchange+sort for it (r7 A/B at 2M rows x 64
-    # hosts: salted 1.2-4.7 s vs single 0.8-1.7 s; ranks identical —
-    # operators/topk.py salted=False contract). grouped_topk's salted
-    # path remains for callers on pre-3.5 planners or with per-key
-    # volumes beyond the partial-limit bound.
     ranked = grouped_topk(
         slim,
         ["host"],
         admission_order(),
         max(max_budget, 1),
         rank_col="host_rank",
-        salted=False,
     )
     winners = ranked.filter(F.col("host_rank") <= F.col("budget")).select(
         "url_hash", "host_rank"

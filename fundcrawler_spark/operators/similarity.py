@@ -2,7 +2,7 @@
 
 Baseline: brute-force cosine top-k — queries x corpus via broadcast of
 the (small) query set, dot products in JVM higher-order functions
-(zip_with + aggregate), salted top-K per query. The scale path is an
+(zip_with + aggregate), exact top-K per query. The scale path is an
 LSH-bucketed variant (random-hyperplane signs with deterministic
 integer "planes") that only scores within-bucket candidates — the
 IVF-style pattern: probe buckets, score locally, merge.
@@ -92,8 +92,9 @@ def brute_force_topk(
     product and the same sequential left-fold order via cumsum
     (test_kernel_equivalence pins the fold; test_similarity pins this
     path against cosine_scored's), so the exact-oracle rows are
-    unchanged. Per-query ranking stays the salted two-phase top-K so
-    popular queries don't pin reducers.
+    unchanged. Per-query ranking is ``grouped_topk``'s single window,
+    whose map-side partial WindowGroupLimit keeps popular queries from
+    pinning reducers.
     """
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")

@@ -183,67 +183,3 @@ def hll_estimate(registers: dict[int, int], m: int = HLL_M) -> float:
     if est <= 2.5 * m and zeros > 0:
         est = m * math.log(m / zeros)
     return est
-
-
-def _horner_batch(tokens, base: int = 131, p: int = P31):
-    """Vectorized horner_hash over a list of strings: group by length,
-    one numpy Horner sweep per distinct length (columns of an
-    (n_tokens, L) codepoint matrix) — zero per-character Python.
-    Matches textstats.horner_hash bit-for-bit (same mod-each-step)."""
-    import numpy as np
-
-    n = len(tokens)
-    out = np.zeros(n, dtype=np.int64)
-    by_len: dict[int, list[int]] = {}
-    for i, t in enumerate(tokens):
-        by_len.setdefault(len(t), []).append(i)
-    for length, idxs in by_len.items():
-        ix = np.asarray(idxs)
-        if length == 0:
-            continue  # horner_hash('') == 0 (the guarded empty sweep)
-        mat = np.frombuffer(
-            "".join(tokens[i] for i in idxs).encode("utf-32-le"),
-            dtype=np.uint32,
-        ).reshape(len(idxs), length).astype(np.int64)
-        h = np.zeros(len(idxs), dtype=np.int64)
-        for j in range(length):
-            h = (h * base + mat[:, j]) % p
-        out[ix] = h
-    return out
-
-
-def cms_sketch_kernel(
-    tokens: DataFrame, token_col: str = "token", width: int = CMS_WIDTH
-) -> DataFrame:
-    """Arrow-kernel twin of cms_sketch — bit-identical output, built
-    for the hot path: the Column version hashes each token occurrence
-    through an interpreted higher-order-function tree (Spark HOFs are
-    not codegen'd), which at 100-TB token volumes dominates the job.
-    Here each Arrow batch is hashed with batched numpy Horner sweeps
-    and folded into per-batch (seed, bucket) partial counts via
-    bincount, so at most depth*width rows leave each batch and the
-    final groupBy-sum merges partials exactly like any CMS merge."""
-    import pandas as pd
-
-    def kernel(batches):
-        import numpy as np
-
-        for pdf in batches:
-            toks = ["" if t is None else t for t in pdf[token_col]]
-            if not toks:
-                continue
-            h = _horner_batch(toks)
-            frames = []
-            for j, (a, b) in enumerate(CMS_SEEDS):
-                buckets = ((a * h + b) % P31) % width
-                c = np.bincount(buckets, minlength=width)
-                nz = np.nonzero(c)[0]
-                frames.append(pd.DataFrame({
-                    "seed": np.full(len(nz), j, dtype=np.int32),
-                    "bucket": nz.astype(np.int64),
-                    "c": c[nz].astype(np.int64),
-                }))
-            yield pd.concat(frames, ignore_index=True)
-
-    partial = tokens.mapInPandas(kernel, "seed int, bucket long, c long")
-    return partial.groupBy("seed", "bucket").agg(F.sum("c").alias("c"))

@@ -1,14 +1,11 @@
 """Bounded top-K per group — the Spark rewrite of the reference's
 min-heap ``FundFolder`` (utils/result_analyse.py:93-124).
 
-The naive ``row_number() OVER (PARTITION BY g ORDER BY k DESC)`` puts
-every row of a group through ONE reducer — with 3 categories over 100 TB
-that's 3 reducers sorting ~33 TB each. ``grouped_topk`` therefore runs
-two phases:
-
-  1. local: rank within (group, physical-partition-salt) — an even
-     shuffle; keep k per salt cell, leaving <= salts*k rows per group;
-  2. global: exact rank over the tiny survivor set.
+``grouped_topk`` is ONE exact ``row_number() OVER (PARTITION BY g ORDER
+BY k DESC)`` window filtered to ``rank <= k``. Spark 3.5+ plans that
+filter as a map-side partial ``WindowGroupLimit`` below the shuffle, so
+each map task forwards at most k rows per group and a dominant group
+never sends more than ``tasks * k`` rows to its reducer.
 
 Ties break deterministically by ``tiebreak`` columns ascending — a
 documented divergence from the reference, whose heap eviction pops an
@@ -33,41 +30,11 @@ def grouped_topk(
     k: int,
     tiebreak: list[str] = (),
     rank_col: str = "rank",
-    n_salts: int = 32,
-    salt_cols: list[str] | None = None,
-    salted: bool = True,
 ) -> DataFrame:
-    """Exact per-group top-K with a salted pre-aggregation phase.
+    """Exact per-group top-K.
 
     ``order_by``: str means 'that column descending'; pass Column for
     custom direction. Result keeps all input columns + ``rank_col``.
-    ``salt_cols``: columns whose hash spreads rows of one group across
-    salt cells (must vary within a group!); defaults to ``tiebreak``.
-    ``salted=False`` skips the pre-phase and runs ONE exact window —
-    the right physical plan when the caller knows the per-group row
-    count is small (the rank values are identical either way; this is
-    a plan choice, not a semantics choice).
     """
-    order = _order(list(order_by), list(tiebreak))
-    if not salted:
-        w = Window.partitionBy(*group_cols).orderBy(*order)
-        return (
-            df.withColumn(rank_col, F.row_number().over(w))
-            .filter(F.col(rank_col) <= k)
-        )
-    salt_src = salt_cols if salt_cols is not None else list(tiebreak)
-    if not salt_src:
-        raise ValueError("grouped_topk needs tiebreak or salt_cols to salt on")
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_src]), F.lit(n_salts))
-    local_w = Window.partitionBy(*group_cols, "__salt").orderBy(*order)
-    survivors = (
-        df.withColumn("__salt", salt)
-        .withColumn("__lrn", F.row_number().over(local_w))
-        .filter(F.col("__lrn") <= k)
-        .drop("__salt", "__lrn")
-    )
-    final_w = Window.partitionBy(*group_cols).orderBy(*order)
-    return (
-        survivors.withColumn(rank_col, F.row_number().over(final_w))
-        .filter(F.col(rank_col) <= k)
-    )
+    w = Window.partitionBy(*group_cols).orderBy(*_order(list(order_by), list(tiebreak)))
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)

@@ -73,10 +73,16 @@ POOL_PARTITIONS = 8
 # proportional fan-in for genuinely large ones
 COALESCE_ROWS_PER_TASK = 4096
 
+# partition ceiling for the frontier's checkpoint writes and the active
+# slice: the adaptive widths above never fan out past this
+MAX_FRONTIER_PARTITIONS = 32
+
+# Crawl-delay -> per-wave request cap basis (RobotsMatcher.budget_cap)
+WAVE_SECONDS = 1.0
+
 
 @dataclass
 class CrawlConfig:
-    n_salts: int = 32
     n_shards: int = 64
     seen_kind: str = "bloom"          # 'bloom' | 'cuckoo'
     insert_on: str = "success"         # 'success' | 'admission' (cuckoo)
@@ -87,7 +93,6 @@ class CrawlConfig:
     max_budget: int = 160              # cpu*5 analog (rate_control.py:30)
     init_budget: float | None = None   # warm-start AIMD cur (bench only)
     checkpoint_every: int = 1          # durable ckpt cadence (waves)
-    wave_seconds: float = 1.0          # Crawl-delay -> per-wave cap basis
     discover: bool = False             # recursive link discovery
     shard_capacity: int = 1_000_000
     robots_by_host: dict = field(default_factory=dict)
@@ -363,7 +368,7 @@ class Crawler:
             seeds = spark.read.parquet(seeds_path)
             # a fresh run starts from a clean workdir, so the seen set is
             # empty and the seed frontier needs no probe-at-insert
-            frontier = robots_drop(frontier_ops.seeds_to_frontier(seeds, cfg.n_salts))
+            frontier = robots_drop(frontier_ops.seeds_to_frontier(seeds))
             shards = self.seen.empty_shards()
             budgets = BudgetTable(max_num=float(cfg.max_budget), init_cur=cfg.init_budget)
             wave, order_offset = 0, 0
@@ -371,7 +376,7 @@ class Crawler:
         from ..operators.politeness import RobotsMatcher
 
         robots_caps = {
-            h: RobotsMatcher(txt, cfg.agent).budget_cap(cfg.wave_seconds)
+            h: RobotsMatcher(txt, cfg.agent).budget_cap(WAVE_SECONDS)
             for h, txt in cfg.robots_by_host.items()
         }
 
@@ -774,9 +779,7 @@ class Crawler:
                 backlog_total, backlog_admittable = {}, {}
                 orig_rem_lb = dict(total)
                 return
-            keys = top_slice_keys(
-                src, slice_k, approx_rows=sum(total.values())
-            ).localCheckpoint()
+            keys = top_slice_keys(src, slice_k).localCheckpoint()
             active = src.join(F.broadcast(keys), "url_hash").localCheckpoint()
             backlog = src.join(F.broadcast(keys), "url_hash", "left_anti")
             active_counts = {
@@ -796,10 +799,7 @@ class Crawler:
         def refill(hosts: list[str]) -> None:
             nonlocal active, backlog
             sub = backlog.filter(F.col("host").isin(hosts))
-            approx = sum(backlog_admittable.get(h, 0) for h in hosts)
-            keys = top_slice_keys(
-                sub, slice_k, approx_rows=approx
-            ).localCheckpoint()
+            keys = top_slice_keys(sub, slice_k).localCheckpoint()
             moved = backlog.join(F.broadcast(keys), "url_hash").localCheckpoint()
             # amortized: one backlog rewrite per ~active_slice_waves
             # waves, instead of an O(frontier) rank every wave
@@ -905,8 +905,7 @@ class Crawler:
             # (insertion-time drop), requeues were admitted hence
             # allowed, discoveries were filtered on insert
             cand = active
-            admitted = admit(cand, wave_budgets, cfg.max_budget,
-                             approx_rows=sum(active_counts.values()))
+            admitted = admit(cand, wave_budgets, cfg.max_budget)
             admitted.persist()
 
             fetched_raw = run_fetch(admitted, cfg.fail_rate, cfg.max_fail_attempts,
@@ -1070,9 +1069,7 @@ class Crawler:
                 # frontier after the dedup triangle — batch-distinct,
                 # anti-join vs pending frontier, seen-set probe
                 if cfg.discover:
-                    from ..functions.urlnorm import (
-                        canonicalize_url, host_salt, url_hash, url_host,
-                    )
+                    from ..functions.urlnorm import canonicalize_url, url_hash, url_host
 
                     disc = (
                         ok.select(F.explode("links").alias("url"), "seed_index")
@@ -1080,13 +1077,12 @@ class Crawler:
                         .withColumn("url_norm", canonicalize_url(F.col("url")))
                         .withColumn("url_hash", url_hash(F.col("url_norm")))
                         .withColumn("host", url_host(F.col("url_norm")))
-                        .withColumn("host_salt", host_salt(F.col("host"), cfg.n_salts, F.col("url_norm")))
                         .withColumn("page_type", F.lit("ANNOUNCE"))
                         .withColumn("retry_count", F.lit(0).cast("int"))
                         .withColumn("priority", F.col("seed_index"))
                         .withColumn("wave", F.lit(wave + 1).cast("int"))
                         .select(
-                            "url", "url_norm", "url_hash", "host", "host_salt",
+                            "url", "url_norm", "url_hash", "host",
                             "page_type", "seed_index", "retry_count", "priority", "wave",
                         )
                     )
@@ -1128,12 +1124,12 @@ class Crawler:
                 # refill at checkpoint cadence.
                 t_f0 = time.time()
                 # file-count-adaptive frontier write: ~50k rows/file
-                # instead of a fixed n_salts files (8k bench rows wrote
+                # instead of a fixed 32 files (8k bench rows wrote
                 # 32 near-empty files); still hash-clustered by url_hash
                 n_front_now = sum(active_counts.values()) + sum(backlog_total.values())
                 settle_shards()
                 full = durable_frontier(active_next).repartition(
-                    min(cfg.n_salts, max(1, -(-n_front_now // 50_000))), "url_hash"
+                    min(MAX_FRONTIER_PARTITIONS, max(1, -(-n_front_now // 50_000))), "url_hash"
                 )
                 # overlap the frontier/seen component writes with the
                 # table flush (guide §2.6): they read only the settled
@@ -1190,12 +1186,12 @@ class Crawler:
                 n_act = sum(active_counts.values())
                 active = active_next.repartition(
                     # scale-adaptive: the active slice is control-plane
-                    # sized, and pinning it to n_salts partitions made
-                    # every steady-wave stage schedule n_salts
+                    # sized, and pinning it to 32 partitions made
+                    # every steady-wave stage schedule 32
                     # mostly-empty tasks (r7 A/B: 65.6 -> 79.2 pages/s
                     # with 4x fewer); genuinely large waves still fan
-                    # out to the full n_salts
-                    min(cfg.n_salts, max(1, -(-n_act // COALESCE_ROWS_PER_TASK))),
+                    # out to MAX_FRONTIER_PARTITIONS
+                    min(MAX_FRONTIER_PARTITIONS, max(1, -(-n_act // COALESCE_ROWS_PER_TASK))),
                     "url_hash",
                 ).localCheckpoint(eager=False)
             if cfg.wave_hook is not None:
@@ -1223,7 +1219,7 @@ class Crawler:
             self._write_checkpoint(
                 wave - 1,
                 durable_frontier(active).repartition(
-                    min(cfg.n_salts, max(1, -(-n_front_now // 50_000))), "url_hash"
+                    min(MAX_FRONTIER_PARTITIONS, max(1, -(-n_front_now // 50_000))), "url_hash"
                 ),
                 shards, budgets, order_offset,
                 incomplete=incomplete, exhausted=exhausted_all,

@@ -87,7 +87,6 @@ FRONTIER_SCHEMA = T.StructType(
         T.StructField("url_norm", T.StringType(), False),
         T.StructField("url_hash", T.LongType(), False),
         T.StructField("host", T.StringType(), False),
-        T.StructField("host_salt", T.IntegerType(), False),
         T.StructField("page_type", T.StringType(), False),
         T.StructField("seed_index", T.LongType(), False),
         T.StructField("retry_count", T.IntegerType(), False),

@@ -5,8 +5,8 @@
         jobs/crawl_job.py --workdir /tmp/crawl --seeds 100 [--resume]
 
 On a real cluster the same invocation runs against the cluster master;
-all engine parallelism knobs (n_salts, n_shards, shuffle partitions)
-are set for multi-executor layouts — local[N] is just the sandbox
+the engine parallelism knobs (n_shards, shuffle partitions) are set
+for multi-executor layouts — local[N] is just the sandbox
 master URL.
 """
 

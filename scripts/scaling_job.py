@@ -21,7 +21,8 @@ identical input. Segments are grouped by plane:
   reported separately, not as evidence against executor scaling):
     * repartition   — hash-partition the frontier by url_hash
     * bloom_insert  — cogrouped per-shard read-modify-write
-    * admission     — salted per-host top-K (two slim exchanges)
+    * admission     — per-host top-K (one slim exchange over a map-side
+                      partial WindowGroupLimit)
     * anti_join     — broadcast anti join (tiny; fixed cost)
 """
 
@@ -43,9 +44,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from fundcrawler_spark.functions.parse import parse_all
-    from fundcrawler_spark.functions.urlnorm import (
-        build_url, canonicalize_url, host_salt, url_hash, url_host,
-    )
+    from fundcrawler_spark.functions.urlnorm import build_url, canonicalize_url, url_hash, url_host
     from fundcrawler_spark.operators.fetch import run_fetch
     from fundcrawler_spark.operators.politeness import admit
     from fundcrawler_spark.operators.seen import SeenSet
@@ -91,7 +90,6 @@ def main() -> None:
         .withColumn("url_norm", canonicalize_url(F.col("url")))
         .withColumn("url_hash", url_hash(F.col("url_norm")))
         .withColumn("host", F.concat(F.lit("h"), (F.col("seed_index") % 4).cast("string")))
-        .withColumn("host_salt", host_salt(F.col("host"), 32, F.col("url_norm")))
         .withColumn("retry_count", F.lit(0).cast("int"))
         .withColumn("wave", F.lit(0).cast("int"))
     )
@@ -123,7 +121,6 @@ def main() -> None:
         .withColumn("url_norm", canonicalize_url(F.col("url")))
         .withColumn("url_hash", url_hash(F.col("url_norm")))
         .withColumn("host", url_host(F.col("url_norm")))
-        .withColumn("host_salt", host_salt(F.col("host"), 32, F.col("url_norm")))
         .withColumn("page_type", F.lit("OVERVIEW"))
         .withColumn("retry_count", (F.col("seed_index") % 3).cast("int"))
         .withColumn("priority", F.col("seed_index") % 1000)

@@ -39,32 +39,6 @@ def test_pmi_collocations_hand_case(spark):
     assert got["hong kong"]["pmi_scaled"] > got["the cat"]["pmi_scaled"]
 
 
-def test_cms_kernel_equals_column_sketch(spark):
-    """Arrow-kernel CMS build (batched numpy Horner + bincount
-    partials) is bit-identical to the Column-expression build on real
-    data, incl. empty-string and non-ASCII tokens."""
-    from pyspark.sql import functions as F
-
-    from fundcrawler_spark.operators.sketch import cms_sketch, cms_sketch_kernel
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length("text") - 2, F.lit(1))),
-        lambda i: F.substring(F.lower(F.col("text")), i, 3),
-    )
-    tok = docs.select(F.explode(grams).alias("token")).cache()
-    col = {(r["seed"], r["bucket"]): r["c"] for r in cms_sketch(tok, width=256).collect()}
-    ker = {(r["seed"], r["bucket"]): r["c"] for r in cms_sketch_kernel(tok, width=256).collect()}
-    assert ker == col
-
-    edge = spark.createDataFrame(
-        [("",), ("a",), ("héllo",), ("中文字",), ("x" * 40,)], "token string"
-    )
-    col_e = {(r["seed"], r["bucket"]): r["c"] for r in cms_sketch(edge).collect()}
-    ker_e = {(r["seed"], r["bucket"]): r["c"] for r in cms_sketch_kernel(edge).collect()}
-    assert ker_e == col_e
-
-
 def test_zorder_compact_prunes_both_columns(spark):
     """Z-order compaction makes per-file min/max tight on BOTH
     columns: a 2D box predicate prunes (much) more than after bin-pack

@@ -1,8 +1,11 @@
 """Exact resume: kill after wave K, resume, final state identical to an
 uninterrupted run (north-rule checkpoint contract)."""
 
+import os
 import shutil
 import tempfile
+
+from pyspark.sql import functions as F
 
 from fundcrawler_spark import fixtures as fx
 from fundcrawler_spark.plans.wave_loop import Crawler, CrawlConfig
@@ -19,7 +22,20 @@ def test_resume_equals_straight_run(spark):
         c1 = Crawler(spark, wd1, full)
         s1 = c1.run(seeds=seeds, log=lambda *a: None)
 
-        Crawler(spark, wd2, half).run(seeds=seeds, log=lambda *a: None)
+        h = Crawler(spark, wd2, half)
+        h.run(seeds=seeds, log=lambda *a: None)
+        # a checkpoint written before the frontier dropped its host_salt
+        # column carries it as an extra integer field; resume must
+        # ignore it
+        fdir = os.path.join(wd2, "checkpoints", f"wave={h.latest_checkpoint():05d}", "frontier")
+        old = os.path.join(wd2, "frontier_with_salt")
+        (spark.read.parquet(fdir)
+         .withColumn("host_salt", F.pmod(F.xxhash64("host", "url_norm"), F.lit(32)).cast("int"))
+         .write.parquet(old))
+        shutil.rmtree(fdir)
+        os.rename(old, fdir)
+        assert "host_salt" in spark.read.parquet(fdir).columns
+
         c2 = Crawler(spark, wd2, full)
         s2 = c2.run(resume=True, log=lambda *a: None)
 
@@ -42,8 +58,6 @@ def test_resume_equals_straight_run(spark):
 
 
 def test_torn_checkpoint_not_resumed(spark):
-    import os
-
     seeds = spark.createDataFrame(fx.seed_rows(4), SEEDS_SCHEMA)
     cfg = CrawlConfig(fail_rate=0.0, max_waves=2, n_shards=4)
     wd = tempfile.mkdtemp(prefix="torn_")

@@ -66,7 +66,7 @@ def test_crawl_delay_caps_admission(spark):
         c.run(seeds=seeds, log=lambda *a: None)
         log = c.fetch_log.read(spark)
         per_wave = log.groupBy("wave").sum("n_admitted").collect()
-        # cap = wave_seconds/delay = 4 requests per wave despite budget 100
+        # cap = WAVE_SECONDS/delay = 1.0/0.25 = 4 requests per wave despite budget 100
         assert all(r["sum(n_admitted)"] <= 4 for r in per_wave), per_wave
         assert len(per_wave) >= 4  # 16 pages at <=4/wave
     finally:

@@ -31,15 +31,6 @@ def test_single_host_fetch_spreads_over_partitions(spark):
     assert n_parts >= 8, f"single host collapsed to {n_parts} fetch partitions"
 
 
-def test_single_host_frontier_salt_distribution(spark):
-    seeds = spark.createDataFrame(fx.seed_rows(2000), SEEDS_SCHEMA)
-    frontier = seeds_to_frontier(seeds, n_salts=32)
-    dist = frontier.groupBy("host_salt").count().collect()
-    counts = [r["count"] for r in dist]
-    assert len(counts) == 32  # every salt bucket populated
-    assert max(counts) < 3 * min(counts)  # roughly even
-
-
 def test_bloom_shard_at_ten_million_keys():
     """Sizing math from SURVEY.md §4.1: a 10^7-key shard at 1% FPR is
     ~12 MB and keeps its FPR — 1000 such shard-groups cover 10^10 keys."""
@@ -81,7 +72,7 @@ def test_admit_literal_map_equals_broadcast_join(spark):
     """admit() attaches budgets as a literal create_map below 256 hosts
     and as a broadcast join above; both plans must admit the same set.
     Forced here by synthesizing >256 hosts (multi-site frontier)."""
-    from fundcrawler_spark.functions.urlnorm import host_salt, url_hash
+    from fundcrawler_spark.functions.urlnorm import url_hash
 
     n_hosts = 300
     fr = (
@@ -99,7 +90,6 @@ def test_admit_literal_map_equals_broadcast_join(spark):
         )
         .withColumn("url_norm", F.col("url"))
         .withColumn("url_hash", url_hash(F.col("url_norm")))
-        .withColumn("host_salt", host_salt(F.col("host"), 32, F.col("url_norm")))
     )
     budgets_all = {f"h{i}.example.com": (3 if i % 2 else 0) for i in range(n_hosts)}
     big = admit(fr, budgets_all, 3)                     # >256 -> broadcast join

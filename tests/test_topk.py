@@ -27,20 +27,21 @@ def test_small_group_under_k(spark):
     assert out.count() == 2
 
 
-def test_unsalted_plan_is_rank_identical(spark):
-    """salted=False is a physical-plan choice only: identical ranks."""
-    from pyspark.sql import functions as F
-
-    from fundcrawler_spark.operators.topk import grouped_topk
-
+def test_plan_is_one_exchange_over_partial_group_limit(spark):
+    """The single window is skew-safe because Spark plans a map-side
+    partial WindowGroupLimit below its one exchange: each map task
+    forwards at most k rows per group to the reducer."""
     df = spark.range(0, 5000).select(
         (F.col("id") % 7).alias("g"),
         (F.col("id") * 2654435761 % 1000).alias("score"),
         F.col("id").alias("tid"),
     )
-    a = grouped_topk(df, ["g"], [F.col("score").desc()], 10, tiebreak=["tid"])
-    b = grouped_topk(df, ["g"], [F.col("score").desc()], 10, tiebreak=["tid"],
-                     salted=False)
-    ka = sorted((r["g"], r["rank"], r["tid"]) for r in a.collect())
-    kb = sorted((r["g"], r["rank"], r["tid"]) for r in b.collect())
-    assert ka == kb
+    out = grouped_topk(df, ["g"], [F.col("score").desc()], 10, tiebreak=["tid"])
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    exchanges = [i for i, line in enumerate(final) if "Exchange " in line]
+    assert len(exchanges) == 1, plan
+    below = final[exchanges[0] + 1:]
+    assert any("WindowGroupLimit" in line and line.rstrip().endswith("Partial")
+               for line in below), plan
