@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import FETCHED_SCHEMA
+from .politeness import with_host_values
 
 
 def run_fetch(
@@ -92,28 +93,27 @@ def with_fetch_order(fetched: DataFrame, host_counts: dict[str, int],
     the wave loop already collects it for the AIMD observation, so the
     driver derives each host's prefix-sum offset (hosts sorted ASC; they
     are ASCII hostnames, so Python's sort matches Spark's binary string
-    order) and attaches ``fetch_order = offset[host] + host_rank`` as a
-    literal map lookup. ``host_rank`` is admit()'s dense 1-based
+    order) and attaches ``fetch_order = offset[host] + host_rank``.
+    ``host_rank`` is admit()'s dense 1-based
     row_number per host, so this is the SAME total order as a global
     row_number window over (host ASC, host_rank ASC) — with zero
     shuffles and no single-partition WindowExec (which would serialize
-    every wave's admitted set through one reducer as hosts grow).
+    every wave's admitted set through one reducer as hosts grow). The
+    offsets attach through ``politeness.with_host_values``.
 
     Rank validity is enforced in-plan: a non-positive host_rank (e.g. a
     caller that fetched unranked rows) raises instead of silently
-    producing a nondeterministic order. Hosts beyond 256 fall back to a
-    broadcast join to keep the literal plan small (same rule as the
-    wave loop's telemetry attach).
+    producing a nondeterministic order.
     """
     if "host_rank" not in fetched.columns:
         raise ValueError(
             "with_fetch_order requires admission ranks: fetch the rows "
             "through politeness.admit (host_rank) before ordering"
         )
-    offsets: dict[str, int] = {}
+    offsets: dict[str, tuple[int]] = {}
     running = int(order_offset)
     for h in sorted(host_counts):
-        offsets[h] = running
+        offsets[h] = (running,)
         running += int(host_counts[h])
     rank = F.when(
         F.col("host_rank") < 1,
@@ -122,25 +122,8 @@ def with_fetch_order(fetched: DataFrame, host_counts: dict[str, int],
             F.col("url_hash").cast("string"),
         )).cast("int"),
     ).otherwise(F.col("host_rank"))
-    if not offsets:
-        off = F.lit(None).cast("long")
-    elif len(offsets) <= 256:
-        omap = F.create_map(*[
-            part for h, o in offsets.items() for part in (F.lit(h), F.lit(o))
-        ])
-        off = omap[F.col("host")]
-    else:
-        odf = fetched.sparkSession.createDataFrame(
-            list(offsets.items()), "host string, __order_base long"
-        )
-        return (
-            fetched.join(F.broadcast(odf), "host", "left")
-            .withColumn("fetch_order",
-                        F.col("__order_base") + rank.cast("long"))
-            .drop("__order_base", "host_rank")
-        )
     return (
-        fetched
-        .withColumn("fetch_order", off + rank.cast("long"))
-        .drop("host_rank")
+        with_host_values(fetched, offsets, "__order_base long")
+        .withColumn("fetch_order", F.col("__order_base") + rank.cast("long"))
+        .drop("__order_base", "host_rank")
     )

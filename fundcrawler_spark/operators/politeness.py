@@ -180,6 +180,38 @@ def with_page_ordinal(df: DataFrame) -> DataFrame:
     return df.withColumn("page_ordinal", m.otherwise(expr).cast("int"))
 
 
+def with_host_values(df: DataFrame, values: dict[str, tuple],
+                     schema: str) -> DataFrame:
+    """Attach driver-side per-host values to ``df`` by its ``host``
+    column: ``values`` maps a host to one tuple laid out as ``schema``
+    (a DDL field list such as ``"budget int"``); a host absent from it
+    gets NULL in every field. Up to 256 hosts the values attach as a
+    literal map lookup, so a plan built once per wave carries no
+    createDataFrame + broadcast-exchange job; above that a broadcast
+    left join keeps the literal plan small. Both paths return
+    ``df.columns`` followed by the schema's fields."""
+    fields = T.StructType.fromDDL(schema).fields
+    if len(values) > 256:
+        vdf = df.sparkSession.createDataFrame(
+            [(h, *v) for h, v in values.items()], f"host string, {schema}"
+        )
+        return df.join(F.broadcast(vdf), "host", "left").select(
+            *df.columns, *[f.name for f in fields]
+        )
+    if not values:
+        return df.select(
+            "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields]
+        )
+    lookup = F.create_map(*[
+        part
+        for h, v in values.items()
+        for part in (F.lit(h), F.struct(*[
+            F.lit(x).cast(f.dataType).alias(f.name) for x, f in zip(v, fields)
+        ]))
+    ])[F.col("host")]
+    return df.select("*", *[lookup.getField(f.name).alias(f.name) for f in fields])
+
+
 def top_slice_keys(frontier: DataFrame, slice_k: int,
                    approx_rows: int | None = None) -> DataFrame:
     """url_hash keys of each host's top ``slice_k`` frontier rows under
@@ -214,36 +246,19 @@ def admit(frontier: DataFrame, budgets: dict[str, int], max_budget: int,
     inserts a map-side partial WindowGroupLimit before the exchange, so
     every task forwards <= max_budget rows per host and the per-host
     reducer input is bounded at max_budget x map-tasks slim rows. Hosts
-    with budget 0 are pruned before any shuffle. ``approx_rows`` is
-    accepted and ignored.
+    with budget 0 are pruned before any shuffle. The budgets attach
+    through ``with_host_values``. ``approx_rows`` is accepted and
+    ignored.
     """
-    spark = frontier.sparkSession
-    b_items = [(h, int(b)) for h, b in budgets.items() if int(b) > 0]
+    b_items = {h: (int(b),) for h, b in budgets.items() if int(b) > 0}
     slim = with_page_ordinal(
         frontier.select("host", "retry_count", "priority", "seed_index",
                         "page_type", "url_hash")
     ).drop("page_type")
-    if not b_items:
-        slim = slim.withColumn("budget", F.lit(0)).filter(F.col("budget") > 0)
-    elif len(b_items) <= 256:
-        # bounded host set (the common case: budgets is a driver dict)
-        # attaches as a LITERAL map lookup — no per-wave createDataFrame
-        # + broadcast-exchange job in the plan; absent host = NULL = the
-        # old budget-0 drop
-        bmap = F.create_map(*[
-            part for h, b in b_items for part in (F.lit(h), F.lit(b))
-        ])
-        slim = (
-            slim.withColumn("budget", bmap[F.col("host")])
-            .filter(F.col("budget").isNotNull())
-        )
-    else:
-        bdf = spark.createDataFrame(b_items, "host string, budget int")
-        slim = (
-            slim.join(F.broadcast(bdf), "host", "left")
-            .na.fill({"budget": 0})
-            .filter(F.col("budget") > 0)
-        )
+    # absent host = NULL = budget 0: dropped before the rank shuffle
+    slim = with_host_values(slim, b_items, "budget int").filter(
+        F.col("budget").isNotNull()
+    )
     ranked = grouped_topk(
         slim,
         ["host"],

@@ -37,10 +37,12 @@ is measured by scripts/bench_backlog.py.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,7 +51,7 @@ from pyspark.sql import functions as F
 from ..operators import frontier as frontier_ops
 from ..operators.assemble import assemble_results
 from ..operators.fetch import run_fetch, with_fetch_order
-from ..operators.politeness import admit, robots_filter
+from ..operators.politeness import admit, robots_filter, with_host_values
 from ..operators.seen import SeenSet
 from ..schemas import (
     EXHAUSTED_SEEDS_SCHEMA,
@@ -81,6 +83,39 @@ MAX_FRONTIER_PARTITIONS = 32
 WAVE_SECONDS = 1.0
 
 
+def overlap(**jobs) -> dict[str, float]:
+    """Run each named job in its own thread and wait for every one.
+    Returns each job's wall span in seconds, timed inside that job's
+    thread, so the spans of overlapped jobs may overlap one another. A
+    failure is raised (the first, in job order) only after all jobs have
+    returned: no write is still running when the caller goes on — e.g.
+    to decide whether a checkpoint is complete. The crawl's independent
+    Spark writes (disjoint tables and paths) run this way because each
+    is a chain of short driver-synchronous jobs whose wall time is
+    latency, not compute."""
+
+    def timed(fn) -> float:
+        t0 = time.time()
+        fn()
+        return time.time() - t0
+
+    if not jobs:
+        return {}
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        futs = {name: pool.submit(timed, fn) for name, fn in jobs.items()}
+    return {name: fut.result() for name, fut in futs.items()}
+
+
+def host_counts(df: DataFrame) -> dict[str, int]:
+    """Per-host row counts of ``df``, collected to the driver."""
+    return {r["host"]: r["count"] for r in df.groupBy("host").count().collect()}
+
+
+def union_all(frames) -> DataFrame:
+    """Left fold of ``frames`` by unionByName."""
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
 @dataclass
 class CrawlConfig:
     n_shards: int = 64
@@ -108,15 +143,17 @@ class CrawlConfig:
     # (active_slice_waves x max_budget) frontier rows in a small ACTIVE
     # set and leaves the rest in a static BACKLOG it only reads at
     # refill time / durable checkpoints — steady-state waves are
-    # O(active), not O(frontier). 0 disables the split (active = all).
+    # O(active), not O(frontier). Must be >= 1.
     active_slice_waves: int = 8
     # optional per-wave telemetry callback: receives one dict per wave
     # with phase wall times (refill / fetch+agg / discover-dedup /
     # checkpoint) and flags — used by scripts/bench_backlog.py to
     # attribute wave-time outliers; None = zero overhead. The phase
-    # keys are serial and sum to wave_sec; a checkpoint wave's flush_*
-    # keys are per-thread spans, each timed from its own start, that
-    # may overlap one another
+    # keys are serial and sum to wave_sec. A checkpoint wave adds
+    # ckpt_flush_sec / ckpt_write_sec (serial) and the flush_* keys
+    # flush_pages/images/logs/assemble/pool_evict/pool_mat/results_sec,
+    # which are spans returned by overlap(): each timed from its own
+    # start, in its own thread, so they may overlap one another
     wave_hook: object = None
 
     def __post_init__(self) -> None:
@@ -135,6 +172,10 @@ class CrawlConfig:
             raise ValueError(f"unknown insert_on {self.insert_on!r}")
         if self.transport not in ("stub", "http"):
             raise ValueError(f"unknown transport {self.transport!r}")
+        if self.active_slice_waves < 1:
+            raise ValueError(
+                f"active_slice_waves must be >= 1, got {self.active_slice_waves}"
+            )
 
 
 def dedup_backlog_rows(seen: SeenSet, shards: DataFrame, rows: DataFrame,
@@ -181,29 +222,6 @@ class Crawler:
             shutil.rmtree(d)
         return d
 
-    def _write_frontier_seen(self, d: str, frontier: DataFrame,
-                             shards: DataFrame) -> None:
-        """The two flush-independent component writes (disjoint paths,
-        no lineage into the buffered table appends) — overlapped with
-        each other here and, at durable-checkpoint waves, with the whole
-        flush_appends chain (guide §2.6)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        writes = [
-            lambda: frontier.write.parquet(os.path.join(d, "frontier")),
-            # shard blobs are few, fixed-count rows; n_shards write
-            # tasks produced n_shards near-empty files + footer-stat
-            # reads per checkpoint. 8 shards/file keeps bench
-            # checkpoints at a handful of files and the 1024-shard x
-            # ~10 MB design point at ~128 files of ~80 MB (guide §6).
-            # Layout only — resume re-reads and re-shuffles by shard id.
-            lambda: shards.coalesce(max(1, self.cfg.n_shards // 8)).write.parquet(
-                os.path.join(d, "seen")),
-        ]
-        with ThreadPoolExecutor(max_workers=2) as ex_pool:
-            for fut in [ex_pool.submit(w) for w in writes]:
-                fut.result()
-
     def _finish_checkpoint(self, d: str, wave: int, budgets: BudgetTable,
                            order_offset: int,
                            incomplete: DataFrame | None = None,
@@ -213,26 +231,20 @@ class Crawler:
         the recorded table snapshot ids all reflect the same interval
         boundary; the _COMPLETE marker is still written only after
         every component write returned."""
-        from concurrent.futures import ThreadPoolExecutor
-
         # the incomplete-seeds pool + exhausted-seed set ride the
         # checkpoint so resume is O(pool), not a full pages-table scan
         # (the pool is bounded by in-flight incomplete seeds; exhausted
         # by permanently-failed seeds)
-        writes = []
+        writes = {}
         if incomplete is not None:
-            writes.append(
-                lambda: incomplete.select("seed_index", "page_type", "body")
+            writes["incomplete"] = lambda: (
+                incomplete.select("seed_index", "page_type", "body")
                 .write.parquet(os.path.join(d, "incomplete"))
             )
         if exhausted is not None:
-            writes.append(
-                lambda: exhausted.write.parquet(os.path.join(d, "exhausted"))
-            )
-        if writes:
-            with ThreadPoolExecutor(max_workers=2) as ex_pool:
-                for fut in [ex_pool.submit(w) for w in writes]:
-                    fut.result()
+            writes["exhausted"] = lambda: exhausted.write.parquet(
+                os.path.join(d, "exhausted"))
+        overlap(**writes)
         meta = {
             "wave": wave,
             "order_offset": order_offset,
@@ -251,15 +263,6 @@ class Crawler:
         # commit marker LAST -> a torn checkpoint is never resumed from
         open(os.path.join(d, "_COMPLETE"), "w").close()
 
-    def _write_checkpoint(self, wave: int, frontier: DataFrame, shards: DataFrame,
-                          budgets: BudgetTable, order_offset: int,
-                          incomplete: DataFrame | None = None,
-                          exhausted: DataFrame | None = None) -> None:
-        d = self._prepare_ckpt_dir(wave)
-        self._write_frontier_seen(d, frontier, shards)
-        self._finish_checkpoint(d, wave, budgets, order_offset,
-                                incomplete=incomplete, exhausted=exhausted)
-
     def latest_checkpoint(self) -> int | None:
         waves = [
             int(n.split("=")[1])
@@ -271,10 +274,15 @@ class Crawler:
 
     def _load_checkpoint(
         self, wave: int
-    ) -> tuple[DataFrame, DataFrame, BudgetTable, int, DataFrame | None, DataFrame | None, dict]:
+    ) -> tuple[DataFrame, DataFrame, BudgetTable, int, DataFrame | None, DataFrame | None]:
         d = self._ckpt_dir(wave)
         with open(os.path.join(d, "meta.json")) as f:
             meta = json.load(f)
+        if "has_incomplete_pool" not in meta:
+            raise RuntimeError(
+                f"checkpoint {d!r} predates the incomplete-pool checkpoint "
+                "format and cannot be resumed; start a fresh crawl"
+            )
         # rewind table snapshots to exactly the checkpointed state
         for name, tbl in (
             ("pages", self.pages), ("images", self.images),
@@ -298,7 +306,7 @@ class Crawler:
             if meta.get("has_exhausted")
             else None
         )
-        return frontier, shards, budgets, meta["order_offset"], pool, exhausted, meta
+        return frontier, shards, budgets, meta["order_offset"], pool, exhausted
 
     def _workdir_dirty(self) -> bool:
         return self.latest_checkpoint() is not None or any(
@@ -343,7 +351,7 @@ class Crawler:
             if last is None:
                 raise RuntimeError("no complete checkpoint to resume from")
             (frontier, shards, budgets, order_offset,
-             ckpt_pool, ckpt_exhausted, ckpt_meta) = self._load_checkpoint(last)
+             ckpt_pool, ckpt_exhausted) = self._load_checkpoint(last)
             frontier = robots_drop(frontier)
             wave = last + 1
             seeds = spark.read.parquet(seeds_path)
@@ -409,32 +417,14 @@ class Crawler:
         # page of an exhausted seed must not re-enter the pool) and
         # bounded by permanently-failed seeds.
         # On resume the pool + exhausted set are read straight from the
-        # checkpoint (O(pool), no pages-table scan); pre-pool-format
-        # checkpoints fall back to the one-time pages-table rebuild.
+        # checkpoint (O(pool), no pages-table scan).
         incomplete: DataFrame | None = None
         exhausted_all: DataFrame | None = None
         if resume:
-            if "has_incomplete_pool" in ckpt_meta:
-                incomplete = (
-                    ckpt_pool.localCheckpoint() if ckpt_pool is not None else None
-                )
-                exhausted_all = (
-                    ckpt_exhausted.localCheckpoint()
-                    if ckpt_exhausted is not None else None
-                )
-            else:
-                pages_tbl = self.pages.read(spark)
-                if pages_tbl is not None:
-                    barrier = pages_tbl.filter(
-                        F.col("page_type").isin(list(PAGE_TYPES))
-                    ).select("seed_index", "page_type", "body")
-                    partial = (
-                        barrier.groupBy("seed_index")
-                        .agg(F.count_distinct("page_type").alias("npt"))
-                        .filter(F.col("npt") < len(PAGE_TYPES))
-                        .select("seed_index")
-                    )
-                    incomplete = barrier.join(partial, "seed_index").localCheckpoint()
+            if ckpt_pool is not None:
+                incomplete = ckpt_pool.localCheckpoint()
+            if ckpt_exhausted is not None:
+                exhausted_all = ckpt_exhausted.localCheckpoint()
 
         def note_exhausted(new_exhausted: DataFrame | None) -> None:
             """Fold this interval's retry-exhausted seed indexes into the
@@ -453,23 +443,17 @@ class Crawler:
                     F.broadcast(exhausted_all), "seed_index", "left_anti"
                 ).localCheckpoint()
 
-        # fine-grained flush timing for the wave_hook (ckpt_detail);
-        # written by flush_appends/finalize_increment, read at the
-        # durable-checkpoint branch — zero cost beyond a few time() calls
-        flush_detail: dict = {}
-
-        def finalize_increment(new_pages: DataFrame) -> None:
+        def finalize_increment(new_pages: DataFrame) -> dict[str, float]:
             """Per-checkpoint-interval finalize: fold this interval's
             barrier pages into the incomplete-seeds pool, assemble +
             append results for seeds that just completed, evict them
             from the pool (the images enrich job runs in parallel from
             flush_appends — it depends only on new_pages). Snapshot
-            alignment: runs inside flush_appends, i.e. BEFORE
-            _write_checkpoint records results/images snapshot ids, so
-            resume rolls all four tables back to the same boundary (the
-            pool is rebuilt from the pages table)."""
-            nonlocal incomplete
-
+            alignment: runs inside flush_appends, i.e. BEFORE the
+            checkpoint records results/images snapshot ids, so resume
+            rolls all four tables back to the same boundary as the
+            checkpointed pool. Returns the flush_pool_mat / assemble /
+            pool_evict / results spans."""
             # barrier pages ONLY: discover-mode ANNOUNCE successes carry
             # the discovering seed's seed_index but are NOT one of the 4
             # barrier types, so they can never (re-)enter the pool — in
@@ -503,28 +487,17 @@ class Crawler:
             t_mat = time.time()
             pool = pool.repartition(POOL_PARTITIONS, "seed_index").localCheckpoint()
             t0 = time.time()
-            flush_detail["flush_pool_mat_sec"] = round(t0 - t_mat, 3)
 
-            # the results append and the pool eviction both read ONLY
-            # the materialized pool (plus the static seeds / the done
-            # agg) and write disjoint targets (results table vs the
-            # driver's `incomplete` ref) — overlap them (guide §2.6);
-            # serially they were two back-to-back sub-second
-            # driver-synchronous chains per flush
-            def _append_results() -> None:
-                t_a = time.time()
-                results_new = assemble_results(pool, seeds)
+            def append_results() -> None:
                 # interval-bounded rows; shrink from shuffle-partition
                 # count to pool-scale write tasks (same small-write
                 # rationale as the fetch_log flush)
-                self.results.append(results_new.coalesce(POOL_PARTITIONS))
-                flush_detail["flush_assemble_sec"] = round(time.time() - t_a, 3)
+                self.results.append(
+                    assemble_results(pool, seeds).coalesce(POOL_PARTITIONS)
+                )
 
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=1) as res_pool:
-                fut_res = res_pool.submit(_append_results)
-                t_e = time.time()
+            def evict_done() -> None:
+                nonlocal incomplete
                 # seeds completing this interval (bounded) leave the pool
                 done = (
                     pool.groupBy("seed_index")
@@ -535,78 +508,58 @@ class Crawler:
                 incomplete = pool.join(
                     F.broadcast(done), "seed_index", "left_anti"
                 ).localCheckpoint()
-                flush_detail["flush_pool_evict_sec"] = round(time.time() - t_e, 3)
-                fut_res.result()
-            flush_detail["flush_results_sec"] = round(time.time() - t0, 3)
 
-        def flush_appends() -> None:
+            # the results append and the pool eviction both read ONLY
+            # the materialized pool (plus the static seeds / the done
+            # agg) and write disjoint targets (results table vs the
+            # driver's `incomplete` ref)
+            spans = overlap(assemble=append_results, pool_evict=evict_done)
+            return {
+                "flush_pool_mat_sec": t0 - t_mat,
+                "flush_results_sec": time.time() - t0,
+                **{f"flush_{k}_sec": v for k, v in spans.items()},
+            }
+
+        def flush_appends() -> dict[str, float]:
+            """Commit the buffered interval: pages, images, fetch_log and
+            the finalize chain, overlapped — the append targets are
+            DISTINCT tables reading from the same cached wave frames.
+            Returns the flush_* spans (none when nothing was buffered)."""
             if pending_exhausted:
-                ex = pending_exhausted[0]
-                for d in pending_exhausted[1:]:
-                    ex = ex.unionByName(d)
-                note_exhausted(ex)
+                note_exhausted(union_all(pending_exhausted))
                 pending_exhausted.clear()
-            df_pages = None
+            jobs = {}
+            finalize_spans: dict[str, float] = {}
             if pending_pages:
-                df_pages = pending_pages[0]
-                for d in pending_pages[1:]:
-                    df_pages = df_pages.unionByName(d)
-            df_logs = None
+                df_pages = union_all(pending_pages)
+
+                def append_images() -> None:
+                    from ..operators.multimodal import enrich_images
+                    from ..operators.politeness import with_page_ordinal
+
+                    raw = with_page_ordinal(df_pages).select(
+                        F.concat_ws("_", F.lit("img"), "seed_index", "page_ordinal").alias("image_id"),
+                        F.col("image_bytes").alias("bytes"),
+                        "caption",
+                    )
+                    self.images.append(enrich_images(raw))
+
+                jobs["pages"] = lambda: self.pages.append(df_pages)
+                jobs["images"] = append_images
+                jobs["finalize"] = lambda: finalize_spans.update(
+                    finalize_increment(df_pages))
             if pending_logs:
-                df_logs = pending_logs[0]
-                for d in pending_logs[1:]:
-                    df_logs = df_logs.unionByName(d)
                 # telemetry rows are interval-bounded (waves x hosts x
                 # partition ids) but the union carries waves x
                 # shuffle-partitions mostly-empty partitions; 1 write
                 # task, 1 file
-                df_logs = df_logs.coalesce(1)
-
-            # the three append targets are DISTINCT tables reading from
-            # the same cached wave frames, so their jobs are independent
-            # — submit pages/fetch_log from a 2-thread pool while the
-            # main thread runs the finalize chain (guide §2.6: overlap
-            # independent jobs; the flush was a serial chain of ~8
-            # driver-synchronous sub-second jobs and its wall time was
-            # pure latency, not compute — r7 profile)
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _append_pages():
-                t0 = time.time()
-                self.pages.append(df_pages)
-                flush_detail["flush_pages_sec"] = round(time.time() - t0, 3)
-
-            def _append_logs():
-                t0 = time.time()
-                self.fetch_log.append(df_logs)
-                flush_detail["flush_logs_sec"] = round(time.time() - t0, 3)
-
-            def _append_images():
-                from ..operators.multimodal import enrich_images
-                from ..operators.politeness import with_page_ordinal
-
-                t0 = time.time()
-                raw = with_page_ordinal(df_pages).select(
-                    F.concat_ws("_", F.lit("img"), "seed_index", "page_ordinal").alias("image_id"),
-                    F.col("image_bytes").alias("bytes"),
-                    "caption",
-                )
-                self.images.append(enrich_images(raw))
-                flush_detail["flush_images_sec"] = round(time.time() - t0, 3)
-
-            with ThreadPoolExecutor(max_workers=3) as ex_pool:
-                futs = []
-                if df_pages is not None:
-                    futs.append(ex_pool.submit(_append_pages))
-                    futs.append(ex_pool.submit(_append_images))
-                if df_logs is not None:
-                    futs.append(ex_pool.submit(_append_logs))
-                if df_pages is not None:
-                    finalize_increment(df_pages)
-                for fut in futs:
-                    fut.result()
+                df_logs = union_all(pending_logs).coalesce(1)
+                jobs["logs"] = lambda: self.fetch_log.append(df_logs)
+            spans = overlap(**jobs)
+            spans.pop("finalize", None)
             pending_pages.clear()
             pending_logs.clear()
+            return {**{f"flush_{k}_sec": v for k, v in spans.items()}, **finalize_spans}
 
         def release_caches() -> None:
             # Only AFTER the durable checkpoint has written the seen
@@ -669,9 +622,7 @@ class Crawler:
                         f"{sorted(bad_ops)}: bloom filters cannot delete "
                         "(use seen_kind='cuckoo' with insert_on='admission')"
                     )
-                df = pending_seen[0][1]
-                for _, d in pending_seen[1:]:
-                    df = df.unionByName(d)
+                df = union_all([d for _, d in pending_seen])
                 shards = self.seen.insert(shards, df).localCheckpoint(eager=False)
             else:
                 # cuckoo blobs are insertion-order-sensitive (eviction
@@ -713,9 +664,7 @@ class Crawler:
                 out = self.seen.probe(shards, rows, mode="cogroup")
             out = out.filter(~F.col("seen")).drop("seen")
             if pending_seen:
-                keys = pending_seen[0][1]
-                for _, d in pending_seen[1:]:
-                    keys = keys.unionByName(d)
+                keys = union_all([d for _, d in pending_seen])
                 out = out.join(
                     F.broadcast(keys.distinct()), "url_hash", "left_anti"
                 )
@@ -753,39 +702,34 @@ class Crawler:
         # Per-host counts are maintained INCREMENTALLY on the driver —
         # bounded deltas per wave; cfg.verify_host_counts re-derives
         # them with a full groupBy as a cross-check (golden tests).
-        slice_k = max(cfg.active_slice_waves, 1) * max(cfg.max_budget, 1)
-        split_enabled = cfg.active_slice_waves > 0
+        slice_k = cfg.active_slice_waves * max(cfg.max_budget, 1)
 
         from ..operators.politeness import top_slice_keys
 
-        active: DataFrame = frontier
-        backlog: DataFrame | None = None
+        active: DataFrame
+        backlog: DataFrame
         active_counts: dict[str, int] = {}
         backlog_total: dict[str, int] = {}
         backlog_admittable: dict[str, int] = {}
         orig_rem_lb: dict[str, int] = {}
 
+        def frontier_counts() -> dict[str, int]:
+            """Per-host frontier rows (active + backlog), hosts with rows only."""
+            return {
+                h: active_counts.get(h, 0) + backlog_total.get(h, 0)
+                for h in set(active_counts) | set(backlog_total)
+                if active_counts.get(h, 0) + backlog_total.get(h, 0) > 0
+            }
+
         def split_frontier(src: DataFrame, total: dict[str, int] | None = None) -> None:
             nonlocal active, backlog, active_counts, backlog_total
             nonlocal backlog_admittable, orig_rem_lb
             if total is None:
-                total = {
-                    r["host"]: r["count"]
-                    for r in src.groupBy("host").count().collect()
-                }
-            if not split_enabled:
-                active, backlog = src, None
-                active_counts = dict(total)
-                backlog_total, backlog_admittable = {}, {}
-                orig_rem_lb = dict(total)
-                return
+                total = host_counts(src)
             keys = top_slice_keys(src, slice_k).localCheckpoint()
             active = src.join(F.broadcast(keys), "url_hash").localCheckpoint()
             backlog = src.join(F.broadcast(keys), "url_hash", "left_anti")
-            active_counts = {
-                r["host"]: r["count"]
-                for r in active.groupBy("host").count().collect()
-            }
+            active_counts = host_counts(active)
             backlog_total = {
                 h: c - active_counts.get(h, 0)
                 for h, c in total.items()
@@ -809,19 +753,13 @@ class Crawler:
             # full per-host counts leave the backlog dicts; in discover
             # mode only the rows SURVIVING the dedup (not already
             # fetched / not pending in active) enter the active dicts
-            moved_counts = {
-                r["host"]: r["count"]
-                for r in moved.groupBy("host").count().collect()
-            }
+            moved_counts = host_counts(moved)
             if cfg.discover:
                 settle_shards()
                 moved = dedup_backlog_rows(
                     self.seen, shards, moved, active
                 ).localCheckpoint()
-                surv_counts = {
-                    r["host"]: r["count"]
-                    for r in moved.groupBy("host").count().collect()
-                }
+                surv_counts = host_counts(moved)
             else:
                 surv_counts = moved_counts
             for h, c in moved_counts.items():
@@ -837,9 +775,6 @@ class Crawler:
                         d.pop(h, None)
             active = active.unionByName(moved)
 
-        def frontier_union() -> DataFrame:
-            return active if backlog is None else backlog.unionByName(active)
-
         def durable_frontier(act: DataFrame) -> DataFrame:
             """backlog+active union for durable checkpoints. Discover
             mode first drops stale backlog copies (already fetched, or
@@ -847,13 +782,57 @@ class Crawler:
             re-admit a fetched URL — the probe rides the checkpoint's
             existing O(frontier) rewrite, steady-state waves stay
             O(active)."""
-            if backlog is None:
-                return act
             bl = backlog
             if cfg.discover:
                 settle_shards()
                 bl = dedup_backlog_rows(self.seen, shards, bl, act)
             return bl.unionByName(act)
+
+        def checkpoint(at_wave: int, act: DataFrame) -> dict[str, float]:
+            """Durable checkpoint of wave ``at_wave`` with active slice
+            ``act``: flush the buffered table appends and write the
+            frontier (backlog+active union) and seen shards, overlapped
+            — the component writes read only the settled shards + the
+            immutable active/backlog frames, while the flush appends to
+            the four IcebergLite tables and updates the pool: disjoint
+            outputs, no shared mutable state. The pool/exhausted writes,
+            the meta snapshot ids (so they capture exactly waves <=
+            at_wave) and the _COMPLETE marker land strictly AFTER the
+            flush. Returns ckpt_flush_sec (checkpoint start until the
+            flush returns), ckpt_write_sec (from there until _COMPLETE)
+            and the flush_* spans."""
+            t_start = time.time()
+            settle_shards()
+            # file-count-adaptive frontier write: ~50k rows/file
+            # instead of a fixed 32 files (8k bench rows wrote 32
+            # near-empty files); still hash-clustered by url_hash
+            n_front = sum(frontier_counts().values())
+            full = durable_frontier(act).repartition(
+                min(MAX_FRONTIER_PARTITIONS, max(1, -(-n_front // 50_000))), "url_hash"
+            )
+            # shard blobs are few, fixed-count rows; n_shards write
+            # tasks produced n_shards near-empty files + footer-stat
+            # reads per checkpoint. 8 shards/file keeps bench
+            # checkpoints at a handful of files and the 1024-shard x
+            # ~10 MB design point at ~128 files of ~80 MB.
+            # Layout only — resume re-reads and re-shuffles by shard id.
+            blobs = shards.coalesce(max(1, cfg.n_shards // 8))
+            d = self._prepare_ckpt_dir(at_wave)
+            flush_spans: dict[str, float] = {}
+            t_overlap = time.time()
+            spans = overlap(
+                frontier=lambda: full.write.parquet(os.path.join(d, "frontier")),
+                seen=lambda: blobs.write.parquet(os.path.join(d, "seen")),
+                flush=lambda: flush_spans.update(flush_appends()),
+            )
+            t_flushed = t_overlap + spans["flush"]
+            self._finish_checkpoint(d, at_wave, budgets, order_offset,
+                                    incomplete=incomplete, exhausted=exhausted_all)
+            return {
+                "ckpt_flush_sec": t_flushed - t_start,
+                "ckpt_write_sec": time.time() - t_flushed,
+                **flush_spans,
+            }
 
         frontier = frontier.persist()
         pending_persisted.append(frontier)
@@ -861,39 +840,26 @@ class Crawler:
 
         while wave < cfg.max_waves:
             t_wave0 = time.time()
+            tracked = frontier_counts()
             if cfg.verify_host_counts:
-                actual = {
-                    r["host"]: r["count"]
-                    for r in frontier_union().groupBy("host").count().collect()
-                }
-                tracked = {
-                    h: active_counts.get(h, 0) + backlog_total.get(h, 0)
-                    for h in set(active_counts) | set(backlog_total)
-                    if active_counts.get(h, 0) + backlog_total.get(h, 0) > 0
-                }
+                actual = host_counts(backlog.unionByName(active))
                 assert actual == tracked, {
                     h: (tracked.get(h), actual.get(h))
                     for h in set(actual) | set(tracked)
                     if actual.get(h) != tracked.get(h)
                 }
-            n_frontier = sum(active_counts.values()) + sum(backlog_total.values())
+            n_frontier = sum(tracked.values())
             if n_frontier == 0:
                 break
-            need: list[str] = []
-            if split_enabled:
-                need = [
-                    h for h in list(backlog_admittable)
-                    if backlog_admittable.get(h, 0) > 0
-                    and orig_rem_lb.get(h, 0) < cfg.max_budget
-                ]
-                if need:
-                    refill(need)
+            need = [
+                h for h in list(backlog_admittable)
+                if backlog_admittable.get(h, 0) > 0
+                and orig_rem_lb.get(h, 0) < cfg.max_budget
+            ]
+            if need:
+                refill(need)
             t_refill_done = time.time()
-            hosts_seen = {
-                h
-                for h in set(active_counts) | set(backlog_total)
-                if active_counts.get(h, 0) + backlog_total.get(h, 0) > 0
-            }
+            hosts_seen = set(frontier_counts())
             wave_budgets = {h: budgets.budget_for(h) for h in hosts_seen}
             # robots Crawl-delay caps admission per wave (politeness.py)
             for h, cap in robots_caps.items():
@@ -934,8 +900,8 @@ class Crawler:
             counts = {h: (s, f) for h, (s, f, _) in wave_agg.items()}
             n_admitted = sum(s + f for s, f in counts.values())
             # deterministic crawl order from the SAME collected counts:
-            # per-host prefix-sum offsets attach as a literal map over
-            # the cached kernel output — no global single-partition
+            # per-host prefix-sum offsets attach to the cached kernel
+            # output by host — no global single-partition
             # WindowExec per wave (r5 verdict item 3)
             fetched = with_fetch_order(
                 fetched, {h: s + f for h, (s, f) in counts.items()}, order_offset
@@ -992,18 +958,17 @@ class Crawler:
                     "retry_count", "body", "image_bytes", "caption", "wave", "fetch_order",
                 ))
                 # metrics + per-partition lineage + AIMD telemetry.
-                # The per-host telemetry triple is driver-side data; it
-                # attaches as a LITERAL map lookup, not a createDataFrame
-                # + broadcast join — the buffered metrics plans flush
+                # The per-host telemetry triple is driver-side data
+                # attached by with_host_values — a literal map lookup
+                # for bounded host sets, not a createDataFrame +
+                # broadcast join: the buffered metrics plans flush
                 # checkpoint_every at a time, and one broadcast per
                 # buffered wave cost ~8 s per flush on its own (r5 A/B
-                # creep audit). Hosts are bounded (the reference crawls
-                # one site; robots/budget tables are driver dicts), but
-                # a >256-host wave falls back to the broadcast join to
-                # keep the literal plan small.
-                tel_rows = [
-                    (h, *budgets.telemetry_for(h)) for h in sorted(hosts_seen)
-                ]
+                # creep audit).
+                tel = {
+                    h: tuple(map(float, budgets.telemetry_for(h)))
+                    for h in sorted(hosts_seen)
+                }
                 wall_ms = (time.time() - t_wave0) * 1000.0
                 metrics = (
                     fetched.withColumn("partition_id", F.spark_partition_id())
@@ -1014,28 +979,9 @@ class Crawler:
                         F.count_if(F.col("state") == "FALSE").alias("n_fail"),
                     )
                 )
-                if len(tel_rows) <= 256:
-                    tel_map = F.create_map(*[
-                        part
-                        for h, fr, bu, th in tel_rows
-                        for part in (
-                            F.lit(h),
-                            F.array(F.lit(float(fr)), F.lit(float(bu)), F.lit(float(th))),
-                        )
-                    ])
-                    metrics = (
-                        metrics.withColumn("_tel", tel_map[F.col("host")])
-                        .withColumn("fail_rate_w10", F.col("_tel")[0])
-                        .withColumn("budget", F.col("_tel")[1])
-                        .withColumn("threshold", F.col("_tel")[2])
-                    )
-                else:
-                    tel = spark.createDataFrame(
-                        tel_rows,
-                        "host string, fail_rate_w10 double, budget double, threshold double",
-                    )
-                    metrics = metrics.join(F.broadcast(tel), "host", "left")
-                metrics = metrics.withColumn("wall_ms", F.lit(wall_ms)).select(
+                metrics = with_host_values(
+                    metrics, tel, "fail_rate_w10 double, budget double, threshold double"
+                ).withColumn("wall_ms", F.lit(wall_ms)).select(
                     "wave", "host", "n_admitted", "n_success", "n_fail",
                     "fail_rate_w10", "budget", "threshold", "partition_id", "wall_ms",
                 )
@@ -1101,63 +1047,28 @@ class Crawler:
                     # scan; cached so the count and the union share one
                     # computation, released at the next durable ckpt
                     disc = disc.persist()
-                    for r in disc.groupBy("host").count().collect():
-                        active_counts[r["host"]] = active_counts.get(r["host"], 0) + r["count"]
+                    for h, c in host_counts(disc).items():
+                        active_counts[h] = active_counts.get(h, 0) + c
                     pending_persisted.append(disc)
                     active_next = active_next.unionByName(disc)
             else:
                 active_next = active
             t_disc_done = time.time()
-            ckpt_detail: dict = {}
+            ckpt_detail: dict[str, float] = {}
 
             # durable checkpoint every cfg.checkpoint_every waves (and on
             # the final wave, detected next iteration); in between, a
             # localCheckpoint cuts lineage without the parquet round-trip
             # — resume granularity vs per-wave overhead is the knob
             if wave % cfg.checkpoint_every == cfg.checkpoint_every - 1:
-                # table commits align with durable checkpoints: flush the
-                # buffered appends FIRST so the checkpoint's snapshot ids
-                # capture exactly waves <= this one. The checkpoint
-                # frontier is the backlog+active union (same schema and
-                # format as ever — resume is unchanged); the reloaded
-                # parquet is then re-split, which doubles as a full
-                # refill at checkpoint cadence.
-                t_f0 = time.time()
-                # file-count-adaptive frontier write: ~50k rows/file
-                # instead of a fixed 32 files (8k bench rows wrote
-                # 32 near-empty files); still hash-clustered by url_hash
-                n_front_now = sum(active_counts.values()) + sum(backlog_total.values())
-                settle_shards()
-                full = durable_frontier(active_next).repartition(
-                    min(MAX_FRONTIER_PARTITIONS, max(1, -(-n_front_now // 50_000))), "url_hash"
-                )
-                # overlap the frontier/seen component writes with the
-                # table flush (guide §2.6): they read only the settled
-                # shards + the immutable active/backlog frames, while
-                # the flush appends to the four IcebergLite tables and
-                # updates the pool — disjoint outputs, no shared
-                # mutable state. The pool/exhausted writes, meta
-                # snapshot ids and the _COMPLETE marker still land
-                # strictly AFTER the flush (r7: serial flush 1.7 s +
-                # write 1.1 s -> overlapped ~1.8 s wall per checkpoint)
-                from concurrent.futures import ThreadPoolExecutor
-
-                ckpt_d = self._prepare_ckpt_dir(wave)
-                with ThreadPoolExecutor(max_workers=1) as fs_pool:
-                    fut_fs = fs_pool.submit(
-                        self._write_frontier_seen, ckpt_d, full, shards
-                    )
-                    flush_appends()
-                    t_f1 = time.time()
-                    fut_fs.result()
-                self._finish_checkpoint(ckpt_d, wave, budgets, order_offset,
-                                        incomplete=incomplete,
-                                        exhausted=exhausted_all)
-                t_f2 = time.time()
-                ckpt_detail = {"ckpt_flush_sec": round(t_f1 - t_f0, 3),
-                               "ckpt_write_sec": round(t_f2 - t_f1, 3),
-                               **flush_detail}
-                flush_detail.clear()
+                # table commits align with durable checkpoints: the
+                # checkpoint flushes the buffered appends so its snapshot
+                # ids capture exactly waves <= this one. Its frontier is
+                # the backlog+active union (same schema and format as
+                # ever — resume is unchanged); the reloaded parquet is
+                # then re-split, which doubles as a full refill at
+                # checkpoint cadence.
+                ckpt_detail = checkpoint(wave, active_next)
                 d = self._ckpt_dir(wave)
                 src = spark.read.schema(FRONTIER_SCHEMA).parquet(os.path.join(d, "frontier"))
                 shards = spark.read.schema(SEEN_SHARDS_SCHEMA).parquet(os.path.join(d, "seen"))
@@ -1167,12 +1078,7 @@ class Crawler:
                 pending_persisted.append(src)
                 # discover mode: the durable dedup may have dropped
                 # stale backlog copies, so counts must be re-derived
-                merged = None if cfg.discover else {
-                    h: active_counts.get(h, 0) + backlog_total.get(h, 0)
-                    for h in set(active_counts) | set(backlog_total)
-                    if active_counts.get(h, 0) + backlog_total.get(h, 0) > 0
-                }
-                split_frontier(src, total=merged)
+                split_frontier(src, total=None if cfg.discover else frontier_counts())
             else:
                 # lazy active checkpoint: truncates lineage but defers
                 # materialization to the next wave's admit/fetch job —
@@ -1206,24 +1112,14 @@ class Crawler:
                     "discover_sec": round(t_disc_done - t_agg_done, 3),
                     "checkpoint_sec": round(t_end - t_disc_done, 3),
                     "wave_sec": round(t_end - t_wave0, 3),
-                    **ckpt_detail,
+                    **{k: round(v, 3) for k, v in ckpt_detail.items()},
                 })
             log(f"[crawl] wave={wave} frontier={n_frontier} admitted={n_admitted}")
             wave += 1
 
         # final durable checkpoint so the last state is always resumable
-        flush_appends()
         if wave > 0 and self.latest_checkpoint() != wave - 1:
-            settle_shards()
-            n_front_now = sum(active_counts.values()) + sum(backlog_total.values())
-            self._write_checkpoint(
-                wave - 1,
-                durable_frontier(active).repartition(
-                    min(MAX_FRONTIER_PARTITIONS, max(1, -(-n_front_now // 50_000))), "url_hash"
-                ),
-                shards, budgets, order_offset,
-                incomplete=incomplete, exhausted=exhausted_all,
-            )
+            checkpoint(wave - 1, active)
         release_caches()
 
         # ---- finalize: results/images were assembled INCREMENTALLY at

@@ -21,6 +21,11 @@ def test_unknown_enum_values_rejected():
         CrawlConfig(insert_on="never")
 
 
+def test_active_slice_waves_must_be_positive():
+    with pytest.raises(ValueError, match="active_slice_waves"):
+        CrawlConfig(active_slice_waves=0)
+
+
 def test_fetch_order_requires_ranks(spark):
     """with_fetch_order must raise on unranked input instead of
     silently producing a nondeterministic order (r5 ADVICE low)."""

@@ -1,10 +1,13 @@
 """Exact resume: kill after wave K, resume, final state identical to an
 uninterrupted run (north-rule checkpoint contract)."""
 
+import json
 import os
+import re
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from fundcrawler_spark import fixtures as fx
@@ -12,18 +15,46 @@ from fundcrawler_spark.plans.wave_loop import Crawler, CrawlConfig
 from fundcrawler_spark.schemas import SEEDS_SCHEMA
 
 
+class InjectedCrash(Exception):
+    pass
+
+
 def test_resume_equals_straight_run(spark):
+    """A crawl that crashes inside a checkpoint's overlapped writes
+    leaves that checkpoint torn; resuming from the one before it equals
+    the straight run bit for bit, which includes rolling back the
+    tables the crashed flush had already committed."""
     seeds = spark.createDataFrame(fx.seed_rows(8), SEEDS_SCHEMA)
     full = CrawlConfig(fail_rate=0.08, max_fail_attempts=1, max_waves=25, n_shards=8)
-    half = CrawlConfig(fail_rate=0.08, max_fail_attempts=1, max_waves=4, n_shards=8)
 
     wd1, wd2 = tempfile.mkdtemp(prefix="rA_"), tempfile.mkdtemp(prefix="rB_")
     try:
         c1 = Crawler(spark, wd1, full)
         s1 = c1.run(seeds=seeds, log=lambda *a: None)
 
-        h = Crawler(spark, wd2, half)
-        h.run(seeds=seeds, log=lambda *a: None)
+        # the 5th fetch_log append raises; it runs alongside the pages,
+        # images, results, frontier and seen writes of that checkpoint
+        h = Crawler(spark, wd2, full)
+        append, calls = h.fetch_log.append, []
+
+        def crashing_append(df):
+            calls.append(df)
+            if len(calls) == 5:
+                raise InjectedCrash("fetch_log append")
+            return append(df)
+
+        h.fetch_log.append = crashing_append
+        with pytest.raises(InjectedCrash):
+            h.run(seeds=seeds, log=lambda *a: None)
+        # a wave that admits nothing appends no logs, so the crashed
+        # wave is the newest checkpoint dir, whatever its number
+        ckpts = os.path.join(wd2, "checkpoints")
+        newest = max(int(n.split("=")[1]) for n in os.listdir(ckpts) if n.startswith("wave="))
+        assert not os.path.exists(os.path.join(ckpts, f"wave={newest:05d}", "_COMPLETE"))
+        assert h.latest_checkpoint() == newest - 1
+        # the crashed flush still committed pages past that checkpoint
+        with open(os.path.join(ckpts, f"wave={newest - 1:05d}", "meta.json")) as f:
+            assert h.pages.current_snapshot() != json.load(f)["snapshots"]["pages"]
         # a checkpoint written before the frontier dropped its host_salt
         # column carries it as an extra integer field; resume must
         # ignore it
@@ -57,6 +88,27 @@ def test_resume_equals_straight_run(spark):
         shutil.rmtree(wd2)
 
 
+def test_pre_pool_checkpoint_rejected(spark):
+    """A checkpoint whose meta.json predates the incomplete-pool format
+    is refused loudly on resume, naming the checkpoint dir."""
+    seeds = spark.createDataFrame(fx.seed_rows(4), SEEDS_SCHEMA)
+    cfg = CrawlConfig(fail_rate=0.0, max_waves=2, n_shards=4)
+    wd = tempfile.mkdtemp(prefix="prepool_")
+    try:
+        c = Crawler(spark, wd, cfg)
+        c.run(seeds=seeds, log=lambda *a: None)
+        d = os.path.join(wd, "checkpoints", f"wave={c.latest_checkpoint():05d}")
+        with open(os.path.join(d, "meta.json")) as f:
+            meta = json.load(f)
+        del meta["has_incomplete_pool"]
+        with open(os.path.join(d, "meta.json"), "w") as f:
+            json.dump(meta, f)
+        with pytest.raises(RuntimeError, match=f"{re.escape(d)}.*predates"):
+            Crawler(spark, wd, cfg).run(resume=True, log=lambda *a: None)
+    finally:
+        shutil.rmtree(wd)
+
+
 def test_torn_checkpoint_not_resumed(spark):
     seeds = spark.createDataFrame(fx.seed_rows(4), SEEDS_SCHEMA)
     cfg = CrawlConfig(fail_rate=0.0, max_waves=2, n_shards=4)
@@ -75,8 +127,6 @@ def test_torn_checkpoint_not_resumed(spark):
 def test_fresh_run_refuses_dirty_workdir(spark):
     """A fresh run must not silently destroy a prior crawl: it raises on
     a dirty workdir unless overwrite=True is passed explicitly."""
-    import pytest
-
     seeds = spark.createDataFrame(fx.seed_rows(4), SEEDS_SCHEMA)
     cfg = CrawlConfig(fail_rate=0.0, max_waves=3, n_shards=4)
     wd = tempfile.mkdtemp(prefix="dirty_")
