@@ -15,6 +15,19 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Static SQL confs: they are read once, when the JVM's first session is
+# built, so every session builder of this engine sets them (``get_spark``
+# and the spark-submit jobs under ``jobs/``).
+#
+# ``spark.sql.codegen.cache.maxEntries`` sizes the JVM-wide LRU of
+# Janino-compiled generated classes. Spark's default is 100 entries, but
+# the query suite uses ~146 distinct whole-stage-codegen classes and a
+# crawl ~250, so the LRU evicted every class between two uses: each warm
+# query_suite pass recompiled 141 classes and each warm crawl_warm pass
+# ~200, and the JIT then compiled every fresh class again. 1024 holds
+# over 4x the crawl's working set.
+STATIC_CONF = {"spark.sql.codegen.cache.maxEntries": "1024"}
+
 
 def get_spark(
     app_name: str = "fundcrawler_spark",
@@ -26,13 +39,17 @@ def get_spark(
 
     AQE is on: at cluster scale it coalesces small shuffle partitions and
     splits skewed ones (the single-host eastmoney skew case); Arrow is on
-    for every pandas-UDF kernel boundary.
+    for every pandas-UDF kernel boundary. The generated-class cache holds
+    1024 classes (``STATIC_CONF``), so a plan that runs again reuses its
+    compiled classes instead of compiling them anew. Static confs take
+    effect only when a JVM's first session is built.
     """
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
+        .config(map=STATIC_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -55,9 +55,14 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from fundcrawler_spark.session import STATIC_CONF
     from fundcrawler_spark.sources.iceberg_lite import IcebergLiteTable
 
-    spark = SparkSession.builder.appName("fundcrawler-corpus").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("fundcrawler-corpus")
+        .config(map=STATIC_CONF)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     tbl = IcebergLiteTable(os.path.join(args.crawl_workdir, "tables", "pages"))

@@ -46,8 +46,13 @@ def main() -> None:
     from fundcrawler_spark import fixtures as fx
     from fundcrawler_spark.plans.wave_loop import Crawler, CrawlConfig
     from fundcrawler_spark.schemas import SEEDS_SCHEMA
+    from fundcrawler_spark.session import STATIC_CONF
 
-    spark = SparkSession.builder.appName("fundcrawler-crawl").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("fundcrawler-crawl")
+        .config(map=STATIC_CONF)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     cfg = CrawlConfig(
