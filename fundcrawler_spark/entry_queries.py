@@ -37,6 +37,7 @@ from .operators.textstats import (
 )
 from .operators.topk import grouped_topk
 from .schemas import PAGE_TYPES
+from .session import spread
 
 AS_OF = "2026-08-01"
 
@@ -248,16 +249,10 @@ bodies AS (
 
 
 def _overview_body_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # repartition the 8-byte source key BEFORE the body concat: the
-    # orders scan is a single sub-maxPartitionBytes file (1 task), and
-    # exchanging o_orderkey costs ~1/40th of exchanging built bodies —
-    # body construction and the downstream parse kernel then both run
-    # at full parallelism (guide §2.3: project before the exchange).
-    # Hash by the unique key, not round-robin: keyless repartition
-    # first sorts its input locally (sortBeforeRepartition, guide §2.5)
-    o = _t(spark, sf_dir, "orders").select("o_orderkey").repartition(
-        spark.sparkContext.defaultParallelism, "o_orderkey"
-    )
+    # spread the 8-byte source key BEFORE the body concat: exchanging
+    # o_orderkey costs ~1/40th of exchanging built bodies (guide §2.3:
+    # project before the exchange)
+    o = spread(_t(spark, sf_dir, "orders").select("o_orderkey"), "o_orderkey")
     k = F.col("o_orderkey")
     typ = (
         F.when((k % 4).cast("int") == 0, "债券型")
@@ -345,9 +340,7 @@ FROM bodies
 """,
 )
 def q_regex_metrics_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select("o_orderkey").repartition(
-        spark.sparkContext.defaultParallelism, "o_orderkey"
-    )  # 1-file scan -> full parallelism for body build + parse kernel
+    o = spread(_t(spark, sf_dir, "orders").select("o_orderkey"), "o_orderkey")
     k = F.col("o_orderkey")
     sd = F.when(k % 7 == 0, F.lit("--")).otherwise(
         F.concat((k % 30).cast("string"), F.lit("."),
@@ -405,9 +398,7 @@ FROM ext
 def q_regex_increase_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.parse import percent_to_double
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey").repartition(
-        spark.sparkContext.defaultParallelism, "o_orderkey"
-    )  # 1-file scan -> full parallelism for body build + parse kernel
+    o = spread(_t(spark, sf_dir, "orders").select("o_orderkey"), "o_orderkey")
     k = F.col("o_orderkey")
     v3 = k % 200 - 50
     i3 = F.when(k % 5 == 0, F.lit("---")).otherwise(
@@ -466,9 +457,7 @@ FROM bodies
 def q_regex_manager(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.parse import parse_manager
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey").repartition(
-        spark.sparkContext.defaultParallelism, "o_orderkey"
-    )  # 1-file scan -> full parallelism for body build + parse kernel
+    o = spread(_t(spark, sf_dir, "orders").select("o_orderkey"), "o_orderkey")
     k = F.col("o_orderkey")
     mgr = (
         F.when((k % 5).cast("int") == 0, "张三丰")
@@ -798,14 +787,11 @@ def q_retry_priority_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_linenumber") % 4).cast("int").alias("page_ordinal"),
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("uid"),
     )
-    # hash the slim projection by its unique uid first (the lineitem
-    # file yields only row-group-many scan tasks; hashing a unique key
-    # spreads like round-robin but skips round-robin's mandatory local
-    # pre-sort — sortBeforeRepartition, guide §2.5 — r7 A/B at sf1.0:
-    # med 2.16 s round-robin vs 1.37 s hash), then grouped_topk's single
-    # window, whose map-side partial WindowGroupLimit forwards <= 12 rows
-    # per host from each task.
-    fr = fr.repartition(spark.sparkContext.defaultParallelism, "uid")
+    # spread the slim projection by its unique uid first (r7 A/B at
+    # sf1.0: med 2.16 s round-robin vs 1.37 s hash), then grouped_topk's
+    # single window, whose map-side partial WindowGroupLimit forwards
+    # <= 12 rows per host from each task.
+    fr = spread(fr, "uid")
     ranked = grouped_topk(
         fr,
         ["host"],
@@ -882,16 +868,13 @@ def q_seen_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial agg the raw rows once and shuffles only the distinct
     # pairs — same results (r7 A/B equal; slightly faster here, and
     # the Expand multiplier is what hurts at 100x).
-    # Hash-repartition the slim pair projection on the group keys first:
-    # the lineitem file opens as only row-group-many scan tasks, so the
-    # partial agg's 600k-entry hash table otherwise builds on ~6 tasks;
-    # the keyed exchange matches the groupBy partitioning (no second
-    # exchange) and the agg runs at full parallelism (r7 A/B at sf1.0:
-    # med 1.15 -> 0.74 s, outputs equal)
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_partkey"
-    ).repartition(
-        spark.sparkContext.defaultParallelism, "l_returnflag", "l_partkey"
+    # Spread the slim pair projection on the group keys first, so the
+    # partial agg's 600k-entry hash table builds on every core; the keyed
+    # exchange matches the groupBy partitioning (no second exchange; r7
+    # A/B at sf1.0: med 1.15 -> 0.74 s, outputs equal)
+    li = spread(
+        _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_partkey"),
+        "l_returnflag", "l_partkey",
     )
     g1 = li.groupBy("l_returnflag", "l_partkey").agg(F.count("*").alias("c"))
     return g1.groupBy("l_returnflag").agg(
@@ -1144,13 +1127,9 @@ FROM f
 """,
 )
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # documents is a single-row-group file: without a repartition the
-    # whole ~10-pass string-feature projection runs on ONE scan task
-    # (r7; the shuffle moves ~15 MB of text, the map stage then runs at
-    # full parallelism)
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    # the ~10-pass string-feature projection runs spread; the shuffle
+    # moves ~15 MB of text
+    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
     feats = quality_features(F.col("text"))
     return d.select(
         "doc_id",
@@ -1192,11 +1171,7 @@ FROM s
 """,
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-row-group file -> repartition so the 12-marker replace
-    # cascade runs parallel, not on one scan task (see q_quality_score)
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
     return d.select("doc_id", lang_guess(F.col("text")).alias("lang_guess"))
 
 
@@ -1280,11 +1255,7 @@ FROM hs
 
 @register("simhash", f"WITH {_SIMHASH_CTES_SQL}{_SIMHASH_SELECT_SQL}")
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # interpreted HOF chain per row over a single-row-group file: run
-    # it at full parallelism (see q_quality_score)
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
     return d.select("doc_id", simhash32(F.col("text")).alias("simhash"))
 
 
@@ -1509,11 +1480,7 @@ def _bpe_oracle_sql() -> str:
 def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.textstats import bpe_ish_token_count
 
-    # heavy regex-split cascade over a single-row-group file: run it
-    # at full parallelism (see q_quality_score)
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    d = spread(_t(spark, sf_dir, "documents"), "doc_id")
     return d.select("doc_id", bpe_ish_token_count(F.col("text")).cast("int").alias("n_bpe_tokens"))
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import spread
 from .textstats import char_shingles, simhash32
 
 
@@ -39,73 +40,31 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram-Jaccard similar pairs via shingle inverted index
     (explode -> self-join on shingle -> count intersections). Never
-    materializes the full cross product.
-
-    ``max_df`` enables document-frequency pruning for corpus scale: the
-    inverted-index join costs sum over grams of df^2, and a handful of
-    stop-grams (df ~ n) dominate it quadratically. With ``max_df`` set,
-    candidate pairs come only from grams with df <= max_df; the
-    jaccard is then computed EXACTLY on the full gram arrays of the
-    candidates (precision stays 1). Recall heuristic, documented: an
-    edit-derived near-dup pair shares its rare grams, so pruning
-    high-df grams keeps threshold-grade pairs while cutting the join
-    cost from O(sum df^2) to O(sum_{df<=max_df} df^2)."""
+    materializes the full cross product; the join costs the sum over
+    grams of df^2, so this is the exact reference the LSH pipelines are
+    tested against, not a corpus-scale operator."""
     sh = docs.select(
         F.col(id_col).alias("id"),
         char_shingles(F.col(text_col), shingle_n).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
-    if max_df is None:
-        inv = sh.select("id", "n_sh", F.explode("sh").alias("g"))
-        a, b = [inv.alias(x) for x in ("a", "b")]
-        inter = (
-            a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
-            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .agg(
-                F.count("*").alias("n_inter"),
-                F.first("a.n_sh").alias("n_a"),
-                F.first("b.n_sh").alias("n_b"),
-            )
-        )
-        jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        return inter.withColumn("jaccard", jac).filter(
-            F.col("jaccard") >= threshold
-        ).select("id_a", "id_b", "jaccard")
-
-    sh = sh.persist()  # released below once the pair set is materialized
-    inv = sh.select("id", F.explode("sh").alias("g"))
-    rare = (
-        inv.groupBy("g").count().filter(F.col("count") <= max_df).select("g")
-    )
-    pruned = inv.join(rare, "g")
-    a, b = pruned.alias("a"), pruned.alias("b")
-    cand = (
+    inv = sh.select("id", "n_sh", F.explode("sh").alias("g"))
+    a, b = [inv.alias(x) for x in ("a", "b")]
+    inter = (
         a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(
+            F.count("*").alias("n_inter"),
+            F.first("a.n_sh").alias("n_a"),
+            F.first("b.n_sh").alias("n_b"),
+        )
     )
-    pairs = cand.join(
-        sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
-                  F.col("n_sh").alias("n_a")), "id_a"
-    ).join(
-        sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
-                  F.col("n_sh").alias("n_b")), "id_b"
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter / (F.col("n_a") + F.col("n_b") - inter)
-    out = (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-        # the verified pair set is tiny — materialize it so the shingle
-        # cache can be released instead of leaking for the session
-        .localCheckpoint()
-    )
-    sh.unpersist()
-    return out
+    jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+    return inter.withColumn("jaccard", jac).filter(
+        F.col("jaccard") >= threshold
+    ).select("id_a", "id_b", "jaccard")
 
 
 _LSH_P = 2147483647
@@ -430,15 +389,8 @@ def _minhash_kernel(
     # the id column keeps its input type (long doc ids, string image ids)
     id_type = docs.schema[id_col].dataType.simpleString()
     out_schema = f"id {id_type}, sh array<long>, bk array<long>"
-    spark = docs.sparkSession
     return (
-        docs.select(F.col(id_col), F.col(text_col))
-        # explicit repartition: AQE coalesces by byte size and would run
-        # the python-compute kernel on 1-2 partitions otherwise. Hash by
-        # the unique id (not round-robin): keyless repartition pays a
-        # local sort of every row first (sortBeforeRepartition, guide
-        # §2.5); hashing a unique key spreads identically without it
-        .repartition(spark.sparkContext.defaultParallelism, F.col(id_col))
+        spread(docs.select(F.col(id_col), F.col(text_col)), F.col(id_col))
         .mapInPandas(kernel, out_schema)
         .withColumn("n_sh", F.size("sh"))
     )
@@ -541,7 +493,6 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b", "jaccard")
         # the verified pair set is tiny — pin it so the signature cache
         # can be released now instead of leaking for the session
-        # (jaccard_pairs release pattern; ADVICE r6)
         .localCheckpoint()
     )
     sig.unpersist()
@@ -703,13 +654,8 @@ def simhash_pairs(
     """SimHash near-dup pairs: 32-bit simhash, block on 4x 8-bit chunks
     (pigeonhole: hamming<=3 pairs share at least one exact chunk), then
     verify hamming distance."""
-    # the simhash32 HOF chain is the heavy map stage — spread it over
-    # the session parallelism before computing (single-file inputs
-    # otherwise run it on 1-2 scan tasks; same guard _minhash_kernel
-    # carries)
-    docs = docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
+    # the simhash32 HOF chain is the heavy map stage
+    docs = spread(docs, F.col(id_col))
     sh = docs.select(F.col(id_col).alias("id"), simhash32(F.col(text_col)).alias("h"))
     chunks = sh.select(
         "id",

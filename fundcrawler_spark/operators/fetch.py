@@ -8,10 +8,6 @@ fix: the eastmoney case is ONE host owning the whole admitted set, and
 the hash spreads its rows evenly over the cores while the AIMD budget
 still caps total admission per host.
 
-Every Python task costs a fixed worker tax (PySpark re-scans its
-zipped library on each task), so the stage runs at most one task per
-core and never more tasks than rows.
-
 The transport is injected as a module-level callable name so the
 closure stays picklable and tests/bench swap implementations without
 touching the plan.
@@ -23,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import FETCHED_SCHEMA
+from ..session import spread
 from .politeness import with_host_values
 
 
@@ -39,9 +36,8 @@ def run_fetch(
     ``wave`` stamps the rows with the wave the fetch HAPPENS in (the
     frontier row's own wave column is its enqueue wave).
     ``expected_rows``: caller's upper bound on the admitted count (the
-    wave loop knows the per-host budgets); caps the partition count so
-    a small wave schedules no more Python tasks than rows. None = unknown =
-    one partition per core.
+    wave loop knows the per-host budgets), passed to ``spread`` as its
+    row bound. None = unknown = one partition per core.
     ``transport``: 'stub' (deterministic offline, the test/bench
     default) or 'http' (live urllib GETs, sources/http_transport) —
     resolved by module name inside the kernel so the closure stays
@@ -57,23 +53,15 @@ def run_fetch(
         for pdf in batches:
             yield fetch_pandas_batch(pdf, fail_rate, max_fail_attempts, discover)
 
-    # A user-specified repartition count is exempt from AQE's byte-size
-    # coalescing, which would otherwise collapse this compute-bound
-    # stage's few small rows onto 1-2 partitions.
-    parallelism = admitted.sparkSession.sparkContext.defaultParallelism
-    if expected_rows is not None:
-        parallelism = max(1, min(parallelism, int(expected_rows)))
     # host_rank (admission rank from politeness.admit) rides through the
     # kernel when present so the crawl-order window downstream needs no
     # broadcast re-join of the admitted ranks (one fewer per-wave job)
     cols = ["url", "url_hash", "host", "page_type", "seed_index", "retry_count", "wave"]
     if "host_rank" in admitted.columns:
         cols.append("host_rank")
-    fetched = (
-        admitted.select(*cols)
-        .repartition(parallelism, "url_hash")
-        .mapInPandas(kernel, FETCHED_SCHEMA)
-    )
+    fetched = spread(
+        admitted.select(*cols), "url_hash", rows=expected_rows
+    ).mapInPandas(kernel, FETCHED_SCHEMA)
     if "host_rank" not in admitted.columns:
         # stub_transport zero-fills host_rank when the input lacks ranks;
         # a zero-filled rank column would make with_fetch_order silently

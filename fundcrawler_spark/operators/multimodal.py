@@ -1,24 +1,28 @@
-"""Multimodal (image) column kernels — mapInPandas batch plumbing.
+"""Multimodal (image, video, audio) column kernels — mapInPandas batch
+plumbing.
 
-Images travel as opaque binary columns with typed metadata
+Media travel as opaque binary columns with typed metadata
 (BASELINE.json input_hint schema). Decode / phash / resize run as
 Arrow-batched pandas kernels over our numpy codecs; on a real cluster
 the same plumbing would call Pillow/turbojpeg inside the batch fn —
 the Spark-side shape (schema, partitioning, batch signature) is what
-this module makes real and tested.
+this module makes real and tested. Every kernel is one row function
+run by ``_map_rows``.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import imaging
 from ..schemas import IMAGES_SCHEMA
+from ..session import spread
+
+_NULLABLE_INT = {T.IntegerType: "Int32", T.LongType: "Int64"}
 
 
 def detect_fmt(data: bytes) -> str | None:
@@ -31,49 +35,51 @@ def detect_fmt(data: bytes) -> str | None:
     return None
 
 
+def _map_rows(df: DataFrame, key: str, schema, fn) -> DataFrame:
+    """Run ``fn`` over every row of ``df`` as one mapInPandas kernel over
+    ``spread(df, key)``. ``fn`` takes one row's column values in
+    ``df.columns`` order and returns a list of output tuples laid out as
+    ``schema`` (a DDL string or StructType). Each output column is built
+    as an object Series, and int/bigint columns cast to the nullable
+    Int32/Int64, so a NULL never sends a 64-bit hash through float64."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    fields = [(f.name, _NULLABLE_INT.get(type(f.dataType), object)) for f in schema]
+
+    def kernel(batches):
+        for pdf in batches:
+            rows = [out for row in zip(*(pdf[c] for c in pdf.columns)) for out in fn(*row)]
+            cols = list(zip(*rows)) or [()] * len(fields)
+            yield pd.DataFrame({
+                name: pd.Series(col, dtype=object).astype(dtype)
+                for (name, dtype), col in zip(fields, cols)
+            })
+
+    return spread(df, key).mapInPandas(kernel, schema)
+
+
+def _decoded(blob) -> tuple[bytes | None, str | None, np.ndarray | None]:
+    """(payload, fmt, pixels) of one image blob: the payload bytes (None
+    when empty), and fmt and the decoded array, both None when the
+    payload is no known image format."""
+    data = bytes(blob) if blob is not None else b""
+    fmt = detect_fmt(data) if data else None
+    return data or None, fmt, imaging.decode_image(data, fmt) if fmt else None
+
+
 def enrich_images(df: DataFrame) -> DataFrame:
     """(image_id, bytes[, caption]) -> full IMAGES_SCHEMA rows: decode
     each payload, record (w, h, fmt), compute the 64-bit DCT phash."""
-    has_caption = "caption" in df.columns
-    in_cols = ["image_id", "bytes"] + (["caption"] if has_caption else [])
+    in_cols = ["image_id", "bytes"] + (["caption"] if "caption" in df.columns else [])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = pdf["image_id"], pdf["bytes"]
-            caps = pdf["caption"] if has_caption else pd.Series([None] * len(pdf))
-            out = {"image_id": [], "bytes": [], "w": [], "h": [],
-                   "fmt": [], "caption": [], "phash": []}
-            for i, (iid, blob, cap) in enumerate(zip(ids, blobs, caps)):
-                data = bytes(blob) if blob is not None else b""
-                fmt = detect_fmt(data) if data else None
-                if fmt is None:
-                    arr, w, h, ph = None, None, None, None
-                else:
-                    arr = imaging.decode_image(data, fmt)
-                    h, w = arr.shape[:2]
-                    ph = imaging.phash64(arr)
-                out["image_id"].append(iid)
-                out["bytes"].append(data or None)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append(fmt)
-                out["caption"].append(cap)
-                out["phash"].append(ph)
-            o = pd.DataFrame(out)
-            o["w"] = o["w"].astype("Int32")
-            o["h"] = o["h"].astype("Int32")
-            o["phash"] = o["phash"].astype("Int64")
-            yield o
+    def row(iid, blob, cap=None):
+        data, fmt, arr = _decoded(blob)
+        if arr is None:
+            return [(iid, data, None, None, None, cap, None)]
+        h, w = arr.shape[:2]
+        return [(iid, data, w, h, fmt, cap, imaging.phash64(arr))]
 
-    # explicit repartition: AQE coalesces by byte size, but this stage's
-    # cost is python decode+phash per row — a wave-sized batch would
-    # collapse to 1-2 partitions and run serially otherwise
-    spark = df.sparkSession
-    return (
-        df.select(*in_cols)
-        .repartition(spark.sparkContext.defaultParallelism, "image_id")
-        .mapInPandas(kernel, IMAGES_SCHEMA)
-    )
+    return _map_rows(df.select(*in_cols), "image_id", IMAGES_SCHEMA, row)
 
 
 def _resize_rgb(arr: np.ndarray, w_out: int, h_out: int) -> np.ndarray:
@@ -128,50 +134,22 @@ def resize_images(df: DataFrame, max_side: int) -> DataFrame:
     fixture metadata; the pixel content is covered by pytest invariants
     (constant images stay constant; global mean is preserved within
     rounding; output decodes round-trip).
-
-    Arrow-batched mapInPandas, one Python kernel per batch (the 100-TB
-    shape: decode cost per row, so partition by row count, not bytes —
-    same explicit repartition rationale as enrich_images).
     """
-    from ..functions import imaging
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": [], "fmt": []}
-            for iid, blob in zip(pdf["image_id"], pdf["bytes"]):
-                data = bytes(blob) if blob is not None else b""
-                fmt = detect_fmt(data) if data else None
-                if fmt is None:
-                    arr, w_out, h_out, payload = None, None, None, None
-                else:
-                    arr = imaging.decode_image(data, fmt)
-                    h, w = arr.shape[:2]
-                    mx = max(w, h)
-                    if mx > max_side:
-                        w_out = max(1, (w * max_side) // mx)
-                        h_out = max(1, (h * max_side) // mx)
-                        arr = _resize_rgb(arr, w_out, h_out)
-                    else:
-                        w_out, h_out = w, h
-                    payload = imaging.encode_image(arr, "ppm")
-                out["image_id"].append(iid)
-                out["bytes"].append(payload)
-                out["w"].append(w_out)
-                out["h"].append(h_out)
-                out["fmt"].append("ppm" if payload is not None else None)
-            o = pd.DataFrame(out)
-            o["w"] = o["w"].astype("Int32")
-            o["h"] = o["h"].astype("Int32")
-            yield o
+    def row(iid, blob):
+        _, _, arr = _decoded(blob)
+        if arr is None:
+            return [(iid, None, None, None, None)]
+        h, w = arr.shape[:2]
+        mx = max(w, h)
+        if mx > max_side:
+            w, h = max(1, (w * max_side) // mx), max(1, (h * max_side) // mx)
+            arr = _resize_rgb(arr, w, h)
+        return [(iid, imaging.encode_image(arr, "ppm"), w, h, "ppm")]
 
-    spark = df.sparkSession
-    return (
-        df.select("image_id", "bytes")
-        .repartition(spark.sparkContext.defaultParallelism, "image_id")
-        .mapInPandas(
-            kernel,
-            "image_id string, bytes binary, w int, h int, fmt string",
-        )
+    return _map_rows(
+        df.select("image_id", "bytes"), "image_id",
+        "image_id string, bytes binary, w int, h int, fmt string", row,
     )
 
 
@@ -207,36 +185,19 @@ def sample_video_frames(df: DataFrame, every_k: int) -> DataFrame:
     skipping is O(1) per frame — the 100-TB shape: frame-sampling must
     not decode the frames it drops).
     """
-    from ..functions import imaging
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"video_id": [], "frame_index": [], "w": [], "h": [], "phash": []}
-            for vid, blob in zip(pdf["video_id"], pdf["bytes"]):
-                frames = parse_video(bytes(blob))
-                for idx in range(0, len(frames), every_k):
-                    arr = imaging.decode_image(frames[idx], "ppm")
-                    h, w = arr.shape[:2]
-                    out["video_id"].append(vid)
-                    out["frame_index"].append(idx)
-                    out["w"].append(w)
-                    out["h"].append(h)
-                    out["phash"].append(imaging.phash64(arr))
-            o = pd.DataFrame(out)
-            o["frame_index"] = o["frame_index"].astype("Int32")
-            o["w"] = o["w"].astype("Int32")
-            o["h"] = o["h"].astype("Int32")
-            o["phash"] = o["phash"].astype("Int64")
-            yield o
+    def row(vid, blob):
+        frames = parse_video(bytes(blob))
+        out = []
+        for idx in range(0, len(frames), every_k):
+            arr = imaging.decode_image(frames[idx], "ppm")
+            h, w = arr.shape[:2]
+            out.append((vid, idx, w, h, imaging.phash64(arr)))
+        return out
 
-    spark = df.sparkSession
-    return (
-        df.select("video_id", "bytes")
-        .repartition(spark.sparkContext.defaultParallelism, "video_id")
-        .mapInPandas(
-            kernel,
-            "video_id string, frame_index int, w int, h int, phash long",
-        )
+    return _map_rows(
+        df.select("video_id", "bytes"), "video_id",
+        "video_id string, frame_index int, w int, h int, phash long", row,
     )
 
 
@@ -245,39 +206,18 @@ def audio_features(df: DataFrame) -> DataFrame:
     duration_s, rms, zero_crossings): decode the AUD1 PCM payload and
     compute the features with the SHARED float64 math
     (functions/audio.pcm_features — also the frozen-oracle generator,
-    so the oracle values are bit-exact by construction). Arrow-batched
-    mapInPandas, same row-count partitioning rationale as the image
-    kernels."""
+    so the oracle values are bit-exact by construction)."""
     from ..functions.audio import decode_audio, pcm_features
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"audio_id": [], "sample_rate": [], "n_samples": [],
-                   "duration_s": [], "rms": [], "zero_crossings": []}
-            for aid, blob in zip(pdf["audio_id"], pdf["bytes"]):
-                samples, rate = decode_audio(bytes(blob))
-                rms, zc = pcm_features(samples)
-                out["audio_id"].append(aid)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(samples))
-                out["duration_s"].append(len(samples) / rate)
-                out["rms"].append(rms)
-                out["zero_crossings"].append(zc)
-            o = pd.DataFrame(out)
-            o["sample_rate"] = o["sample_rate"].astype("Int32")
-            o["n_samples"] = o["n_samples"].astype("Int32")
-            o["zero_crossings"] = o["zero_crossings"].astype("Int32")
-            yield o
+    def row(aid, blob):
+        samples, rate = decode_audio(bytes(blob))
+        rms, zc = pcm_features(samples)
+        return [(aid, rate, len(samples), len(samples) / rate, rms, zc)]
 
-    spark = df.sparkSession
-    return (
-        df.select("audio_id", "bytes")
-        .repartition(spark.sparkContext.defaultParallelism, "audio_id")
-        .mapInPandas(
-            kernel,
-            "audio_id string, sample_rate int, n_samples int, "
-            "duration_s double, rms double, zero_crossings int",
-        )
+    return _map_rows(
+        df.select("audio_id", "bytes"), "audio_id",
+        "audio_id string, sample_rate int, n_samples int, "
+        "duration_s double, rms double, zero_crossings int", row,
     )
 
 
@@ -289,38 +229,18 @@ def blur_scores(df: DataFrame) -> DataFrame:
     by an INDEPENDENT pure-Python reimplementation
     (scripts/freeze_blur.py) matches to the last bit). The standard
     low-quality-image filter a multimodal training pipeline runs
-    before captioning. Arrow-batched mapInPandas; same row-count
-    repartition rationale as enrich_images."""
+    before captioning."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "w": [], "h": [], "blur_var": []}
-            for iid, blob in zip(pdf["image_id"], pdf["bytes"]):
-                data = bytes(blob) if blob is not None else b""
-                fmt = detect_fmt(data) if data else None
-                if fmt is None:
-                    w = h = None
-                    bv = None
-                else:
-                    arr = imaging.decode_image(data, fmt)
-                    h, w = arr.shape[:2]
-                    bv = imaging.laplacian_blur_var(arr)
-                out["image_id"].append(iid)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["blur_var"].append(bv)
-            o = pd.DataFrame(out)
-            o["w"] = o["w"].astype("Int32")
-            o["h"] = o["h"].astype("Int32")
-            yield o
+    def row(iid, blob):
+        _, _, arr = _decoded(blob)
+        if arr is None:
+            return [(iid, None, None, None)]
+        h, w = arr.shape[:2]
+        return [(iid, w, h, imaging.laplacian_blur_var(arr))]
 
-    spark = df.sparkSession
-    return (
-        df.select("image_id", "bytes")
-        .repartition(spark.sparkContext.defaultParallelism, "image_id")
-        .mapInPandas(
-            kernel, "image_id string, w int, h int, blur_var double"
-        )
+    return _map_rows(
+        df.select("image_id", "bytes"), "image_id",
+        "image_id string, w int, h int, blur_var double", row,
     )
 
 
@@ -338,37 +258,16 @@ def dhash_images(df: DataFrame) -> DataFrame:
     pure-Python reimplementation (scripts/freeze_dhash.py) matches to
     the last bit). The second perceptual-hash family next to phash:
     consensus between DCT-spectrum and gradient-sign hashes raises
-    near-dup precision (dedup.consensus_near_dups). Arrow-batched
-    mapInPandas; same row-count repartition rationale as
-    enrich_images."""
+    near-dup precision (dedup.consensus_near_dups)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "w": [], "h": [], "dhash": []}
-            for iid, blob in zip(pdf["image_id"], pdf["bytes"]):
-                data = bytes(blob) if blob is not None else b""
-                fmt = detect_fmt(data) if data else None
-                if fmt is None:
-                    w = h = dh = None
-                else:
-                    arr = imaging.decode_image(data, fmt)
-                    h, w = arr.shape[:2]
-                    dh = imaging.dhash64(arr)
-                out["image_id"].append(iid)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["dhash"].append(dh)
-            o = pd.DataFrame(out)
-            o["w"] = o["w"].astype("Int32")
-            o["h"] = o["h"].astype("Int32")
-            o["dhash"] = o["dhash"].astype("Int64")
-            yield o
+    def row(iid, blob):
+        _, _, arr = _decoded(blob)
+        if arr is None:
+            return [(iid, None, None, None)]
+        h, w = arr.shape[:2]
+        return [(iid, w, h, imaging.dhash64(arr))]
 
-    spark = df.sparkSession
-    return (
-        df.select("image_id", "bytes")
-        .repartition(spark.sparkContext.defaultParallelism, "image_id")
-        .mapInPandas(
-            kernel, "image_id string, w int, h int, dhash long"
-        )
+    return _map_rows(
+        df.select("image_id", "bytes"), "image_id",
+        "image_id string, w int, h int, dhash long", row,
     )

@@ -236,7 +236,7 @@ class SeenSet:
 
     def empty_shards(self) -> DataFrame:
         # over a zero-partition RDD: createDataFrame([]) would spread the
-        # empty list over defaultParallelism Python tasks on every action
+        # empty list over one Python task per core on every action
         return self.spark.createDataFrame(
             self.spark.sparkContext.emptyRDD(), SEEN_SHARDS_SCHEMA
         )

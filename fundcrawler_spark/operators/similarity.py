@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import spread
 from .topk import grouped_topk
 
 P31 = 2147483647
@@ -127,9 +128,8 @@ def brute_force_topk(
                     {"neighbor_id": nid, "query_id": qid, "sim": d / (na * nb)}
                 )
 
-    spark = corpus.sparkSession
     scored = (
-        c.repartition(spark.sparkContext.defaultParallelism, "neighbor_id")
+        spread(c, "neighbor_id")
         .mapInPandas(kernel, f"neighbor_id {id_t}, query_id {id_t}, sim double")
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
@@ -196,12 +196,9 @@ def _lsh_buckets(
                 "buckets": list(buckets),
             })
 
-    spark = df.sparkSession
-    return (
-        df.select(F.col(id_col), F.col(vec_col))
-        .repartition(spark.sparkContext.defaultParallelism, F.col(id_col))
-        .mapInPandas(kernel, f"{out_id} long, v array<double>, buckets array<long>")
-    )
+    return spread(
+        df.select(F.col(id_col), F.col(vec_col)), F.col(id_col)
+    ).mapInPandas(kernel, f"{out_id} long, v array<double>, buckets array<long>")
 
 
 def lsh_topk(
@@ -311,12 +308,9 @@ def _assign_cells(df: DataFrame, id_col: str, out_id: str, vec_col: str,
             yield pd.DataFrame({out_id: pdf[id_col].to_numpy(),
                                 "v": list(V), "cells": list(cells)})
 
-    spark = df.sparkSession
-    return (
-        df.select(F.col(id_col), F.col(vec_col))
-        .repartition(spark.sparkContext.defaultParallelism, F.col(id_col))
-        .mapInPandas(kernel, f"{out_id} long, v array<double>, cells array<int>")
-    )
+    return spread(
+        df.select(F.col(id_col), F.col(vec_col)), F.col(id_col)
+    ).mapInPandas(kernel, f"{out_id} long, v array<double>, cells array<int>")
 
 
 def ivf_topk(

@@ -8,8 +8,11 @@ polynomial rolling-hash document fingerprint, character shingles.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import spread
 
 P31 = 2147483647  # 2^31-1, keeps all polynomial math far below 2^63
 
@@ -168,6 +171,19 @@ def doc_fingerprint(text: Column) -> Column:
     )
 
 
+def _gram3_hashes(t: str | None) -> np.ndarray:
+    """``poly_hash`` of every 3-char gram of ``t`` as int64, the numpy
+    form of ``F.transform(char_shingles(t, 3), poly_hash)``."""
+    cp = np.frombuffer((t or "").encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+    if len(cp) >= 3:
+        # gram i = chars [i, i+3); poly weights 31*pos (1-based)
+        return (31 * cp[:-2] + 62 * cp[1:-1] + 93 * cp[2:]) % P31
+    # substring(t, 1, 3) of a short string is t itself; empty ->
+    # ascii('') = 0 in Spark -> hash 0
+    w = (np.arange(len(cp), dtype=np.int64) + 1) * 31
+    return np.array([(cp * w).sum() % P31 if len(cp) else 0], dtype=np.int64)
+
+
 def doc_fingerprint_kernel(docs: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text") -> DataFrame:
     """Arrow/numpy variant of ``doc_fingerprint`` — bit-identical output
@@ -178,7 +194,6 @@ def doc_fingerprint_kernel(docs: DataFrame, id_col: str = "doc_id",
     The rolling reduce linearizes: fp = sum_i h_i * 33^(n-1-i) mod p,
     so per doc it is one weighted dot product; products stay < 2^62
     (both factors < 2^31) and the partial sum < n * p fits int64."""
-    import numpy as np
     import pandas as pd
 
     P = P31
@@ -196,26 +211,14 @@ def doc_fingerprint_kernel(docs: DataFrame, id_col: str = "doc_id",
         for pdf in batches:
             fps = []
             for t in pdf[text_col]:
-                t = t or ""
-                cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-                if len(cp) >= 3:
-                    # gram i = chars [i, i+3); poly weights 31*pos (1-based)
-                    h = (31 * cp[:-2] + 62 * cp[1:-1] + 93 * cp[2:]) % P
-                else:
-                    # substring(t, 1, 3) of a short string is t itself;
-                    # empty -> ascii('') = 0 in Spark -> hash 0
-                    w = (np.arange(len(cp), dtype=np.int64) + 1) * 31
-                    h = np.array([(cp * w).sum() % P if len(cp) else 0], dtype=np.int64)
+                h = _gram3_hashes(t)
                 pw = powers(len(h))[::-1]
                 fps.append(int(((h * pw) % P).sum() % P))
             yield pd.DataFrame({id_col: pdf[id_col], "fp": fps})
 
-    spark = docs.sparkSession
-    return (
-        docs.select(F.col(id_col), F.col(text_col))
-        .repartition(spark.sparkContext.defaultParallelism, F.col(id_col))
-        .mapInPandas(kernel, f"{id_col} long, fp long")
-    )
+    return spread(
+        docs.select(F.col(id_col), F.col(text_col)), F.col(id_col)
+    ).mapInPandas(kernel, f"{id_col} long, fp long")
 
 
 def minhash_signature(text: Column, n_hashes: int = 16) -> Column:
@@ -243,7 +246,6 @@ def minhash_signature_kernel(docs: DataFrame, n_hashes: int = 16,
     over duplicate grams equals min over the distinct set, so the
     distinct step drops out). One vectorized expression per doc instead
     of n_hashes x n_grams interpreted HOF probes."""
-    import numpy as np
     import pandas as pd
 
     P = P31
@@ -254,23 +256,14 @@ def minhash_signature_kernel(docs: DataFrame, n_hashes: int = 16,
         for pdf in batches:
             sigs = []
             for t in pdf[text_col]:
-                t = t or ""
-                cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-                if len(cp) >= 3:
-                    h = (31 * cp[:-2] + 62 * cp[1:-1] + 93 * cp[2:]) % P
-                else:
-                    w = (np.arange(len(cp), dtype=np.int64) + 1) * 31
-                    h = np.array([(cp * w).sum() % P if len(cp) else 0], dtype=np.int64)
+                h = _gram3_hashes(t)
                 sig = ((h[None, :] * A[:, None] + B[:, None]) % P).min(axis=1)
                 sigs.append(sig.tolist())
             yield pd.DataFrame({id_col: pdf[id_col], "sig": sigs})
 
-    spark = docs.sparkSession
-    return (
-        docs.select(F.col(id_col), F.col(text_col))
-        .repartition(spark.sparkContext.defaultParallelism, F.col(id_col))
-        .mapInPandas(kernel, f"{id_col} long, sig array<long>")
-    )
+    return spread(
+        docs.select(F.col(id_col), F.col(text_col)), F.col(id_col)
+    ).mapInPandas(kernel, f"{id_col} long, sig array<long>")
 
 
 def word_array(text: Column) -> Column:

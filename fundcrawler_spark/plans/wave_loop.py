@@ -119,8 +119,10 @@ def union_all(frames) -> DataFrame:
 @dataclass
 class CrawlConfig:
     n_shards: int = 64
-    seen_kind: str = "bloom"          # 'bloom' | 'cuckoo'
-    insert_on: str = "success"         # 'success' | 'admission' (cuckoo)
+    # 'bloom': insert each URL when its fetch succeeds; 'cuckoo': insert
+    # on admission and delete the URLs whose fetch failed, so they can
+    # be admitted again (only the cuckoo filter can delete)
+    seen_kind: str = "bloom"
     fail_rate: float = 0.0             # stub-transport fault probability
     max_fail_attempts: int = 3         # stub: URL succeeds after this many
     max_retries: int | None = 10       # None = reference's infinite default
@@ -157,19 +159,8 @@ class CrawlConfig:
     wave_hook: object = None
 
     def __post_init__(self) -> None:
-        # insert_on='admission' buffers ('delete', failed-urls) ops so a
-        # failed fetch can be retried; only the cuckoo filter supports
-        # delete, so reject the bloom combination at construction time
-        # rather than silently corrupting the seen set at settle time
-        if self.insert_on == "admission" and self.seen_kind != "cuckoo":
-            raise ValueError(
-                "insert_on='admission' requires seen_kind='cuckoo' "
-                "(bloom filters cannot delete failed admissions)"
-            )
         if self.seen_kind not in ("bloom", "cuckoo"):
             raise ValueError(f"unknown seen_kind {self.seen_kind!r}")
-        if self.insert_on not in ("success", "admission"):
-            raise ValueError(f"unknown insert_on {self.insert_on!r}")
         if self.transport not in ("stub", "http"):
             raise ValueError(f"unknown transport {self.transport!r}")
         if self.active_slice_waves < 1:
@@ -620,7 +611,7 @@ class Crawler:
                     raise AssertionError(
                         "bloom seen-set buffered non-insert ops "
                         f"{sorted(bad_ops)}: bloom filters cannot delete "
-                        "(use seen_kind='cuckoo' with insert_on='admission')"
+                        "(use seen_kind='cuckoo')"
                     )
                 df = union_all([d for _, d in pending_seen])
                 shards = self.seen.insert(shards, df).localCheckpoint(eager=False)
@@ -710,7 +701,6 @@ class Crawler:
         backlog: DataFrame
         active_counts: dict[str, int] = {}
         backlog_total: dict[str, int] = {}
-        backlog_admittable: dict[str, int] = {}
         orig_rem_lb: dict[str, int] = {}
 
         def frontier_counts() -> dict[str, int]:
@@ -722,22 +712,20 @@ class Crawler:
             }
 
         def split_frontier(src: DataFrame, total: dict[str, int] | None = None) -> None:
-            nonlocal active, backlog, active_counts, backlog_total
-            nonlocal backlog_admittable, orig_rem_lb
+            nonlocal active, backlog, active_counts, backlog_total, orig_rem_lb
             if total is None:
                 total = host_counts(src)
             keys = top_slice_keys(src, slice_k).localCheckpoint()
             active = src.join(F.broadcast(keys), "url_hash").localCheckpoint()
             backlog = src.join(F.broadcast(keys), "url_hash", "left_anti")
             active_counts = host_counts(active)
+            # robots-disallowed rows are dropped at insertion, so every
+            # backlog row is admittable by construction
             backlog_total = {
                 h: c - active_counts.get(h, 0)
                 for h, c in total.items()
                 if c - active_counts.get(h, 0) > 0
             }
-            # robots-disallowed rows are dropped at insertion, so every
-            # frontier row is admittable by construction
-            backlog_admittable = dict(backlog_total)
             orig_rem_lb = dict(active_counts)
 
         def refill(hosts: list[str]) -> None:
@@ -767,12 +755,11 @@ class Crawler:
                 if s:
                     active_counts[h] = active_counts.get(h, 0) + s
                     orig_rem_lb[h] = orig_rem_lb.get(h, 0) + s
-                for d in (backlog_total, backlog_admittable):
-                    left = d.get(h, 0) - c
-                    if left > 0:
-                        d[h] = left
-                    else:
-                        d.pop(h, None)
+                left = backlog_total.get(h, 0) - c
+                if left > 0:
+                    backlog_total[h] = left
+                else:
+                    backlog_total.pop(h, None)
             active = active.unionByName(moved)
 
         def durable_frontier(act: DataFrame) -> DataFrame:
@@ -852,9 +839,8 @@ class Crawler:
             if n_frontier == 0:
                 break
             need = [
-                h for h in list(backlog_admittable)
-                if backlog_admittable.get(h, 0) > 0
-                and orig_rem_lb.get(h, 0) < cfg.max_budget
+                h for h in backlog_total
+                if orig_rem_lb.get(h, 0) < cfg.max_budget
             ]
             if need:
                 refill(need)
@@ -964,12 +950,14 @@ class Crawler:
                 # broadcast join: the buffered metrics plans flush
                 # checkpoint_every at a time, and one broadcast per
                 # buffered wave cost ~8 s per flush on its own (r5 A/B
-                # creep audit).
+                # creep audit). The wave's wall_ms rides in the same
+                # tuples: a per-wave F.lit double is inlined into the
+                # generated code, so every wave would compile new classes.
+                wall_ms = (time.time() - t_wave0) * 1000.0
                 tel = {
-                    h: tuple(map(float, budgets.telemetry_for(h)))
+                    h: (*map(float, budgets.telemetry_for(h)), wall_ms)
                     for h in sorted(hosts_seen)
                 }
-                wall_ms = (time.time() - t_wave0) * 1000.0
                 metrics = (
                     fetched.withColumn("partition_id", F.spark_partition_id())
                     .groupBy("wave", "host", "partition_id")
@@ -980,8 +968,9 @@ class Crawler:
                     )
                 )
                 metrics = with_host_values(
-                    metrics, tel, "fail_rate_w10 double, budget double, threshold double"
-                ).withColumn("wall_ms", F.lit(wall_ms)).select(
+                    metrics, tel,
+                    "fail_rate_w10 double, budget double, threshold double, wall_ms double",
+                ).select(
                     "wave", "host", "n_admitted", "n_success", "n_fail",
                     "fail_rate_w10", "budget", "threshold", "partition_id", "wall_ms",
                 )
@@ -1004,7 +993,7 @@ class Crawler:
                 # seen-set maintenance: buffer the wave's key frames —
                 # folded into the shards by settle_shards() at the next
                 # shard read
-                if cfg.insert_on == "admission":
+                if cfg.seen_kind == "cuckoo":
                     pending_seen.append(("insert", admitted.select("url_hash")))
                     fails = fetched.filter(F.col("state") == "FALSE")
                     pending_seen.append(("delete", fails.select("url_hash")))

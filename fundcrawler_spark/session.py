@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -83,3 +83,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def spread(df: DataFrame, *keys, rows: int | None = None) -> DataFrame:
+    """Hash-repartition ``df`` by ``keys`` over one partition per core,
+    or over ``min(cores, rows)`` (at least 1) when the caller knows an
+    upper bound ``rows`` on the row count. This is the width of every
+    compute-heavy stage (a Python kernel, a regex or HOF projection, a
+    wide partial aggregate), for four reasons:
+
+    - a single-file table scan opens only row-group-many tasks (often
+      one), so without an exchange the heavy stage runs on those few;
+    - AQE coalesces shuffle partitions by bytes, and a stage whose cost
+      is per row, not per byte, would collapse onto 1-2 partitions; an
+      explicit partition count is exempt from that coalescing;
+    - every Python task pays a fixed worker start-up cost whatever its
+      rows, so the boundary is paid once per core, never per empty task
+      (``rows`` keeps a small batch from scheduling empty tasks);
+    - hashing a key spreads rows like round-robin without round-robin's
+      local sort of every input row (sortBeforeRepartition).
+    """
+    width = df.sparkSession.sparkContext.defaultParallelism
+    if rows is not None:
+        width = max(1, min(width, int(rows)))
+    return df.repartition(width, *keys)

@@ -1,24 +1,14 @@
-"""Construction-time config guards (r5 ADVICE medium): invalid
-seen-set / insert-mode combinations must fail loudly at CrawlConfig
-init, never silently corrupt the bloom at settle time."""
+"""Construction-time config guards: an unknown seen-set kind or an
+invalid slice width fails loudly at CrawlConfig init."""
 
 import pytest
 
 from fundcrawler_spark.plans.wave_loop import CrawlConfig
 
 
-def test_admission_insert_requires_cuckoo():
-    with pytest.raises(ValueError, match="cuckoo"):
-        CrawlConfig(insert_on="admission", seen_kind="bloom")
-    # the valid combination constructs fine
-    CrawlConfig(insert_on="admission", seen_kind="cuckoo")
-
-
 def test_unknown_enum_values_rejected():
     with pytest.raises(ValueError, match="seen_kind"):
         CrawlConfig(seen_kind="hyperloglog")
-    with pytest.raises(ValueError, match="insert_on"):
-        CrawlConfig(insert_on="never")
 
 
 def test_active_slice_waves_must_be_positive():

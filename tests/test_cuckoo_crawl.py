@@ -18,7 +18,7 @@ def test_cuckoo_admission_mode_completes_and_seen_matches(spark):
     try:
         cfg = CrawlConfig(
             fail_rate=0.15, max_fail_attempts=1, max_waves=40, n_shards=4,
-            seen_kind="cuckoo", insert_on="admission", shard_capacity=10_000,
+            seen_kind="cuckoo", shard_capacity=10_000,
             verify_host_counts=True,
         )
         c = Crawler(spark, wd, cfg)

@@ -33,19 +33,6 @@ def test_lsh_equals_exact_pairs(spark):
     assert len(exact) > 0, "sf0.001 documents should contain planted near-dups"
 
 
-def test_df_pruned_jaccard_equals_exact(spark):
-    """DF-pruned candidate generation (corpus-scale path) must still
-    find every threshold-grade pair here: near-dups share rare grams,
-    and the verify stage computes jaccard exactly on full gram sets."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    n = docs.count()
-    exact = {(r["id_a"], r["id_b"], r["jaccard"])
-             for r in jaccard_pairs(docs, threshold=0.85).collect()}
-    pruned = {(r["id_a"], r["id_b"], r["jaccard"])
-              for r in jaccard_pairs(docs, threshold=0.85, max_df=n // 4).collect()}
-    assert pruned == exact and len(exact) > 0
-
-
 def test_exact_dedup_identity(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     out = exact_dedup(docs)

@@ -18,10 +18,29 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from fundcrawler_spark import fixtures as fx
 from fundcrawler_spark.functions import imaging
 from fundcrawler_spark.operators.multimodal import (
+    _map_rows,
     parse_video,
     resize_images,
     sample_video_frames,
 )
+
+
+# ------------------------------------------------------------- row runner
+
+
+def test_map_rows_keeps_bigint_exact_next_to_null(spark):
+    """One input row yields a NULL and 2^53+1 in one bigint column of one
+    batch: a column built through float64 would round the value to
+    2^53."""
+    big = 2**53 + 1
+    df = spark.createDataFrame([("a",)], "k string")
+    out = _map_rows(
+        df, "k", "k string, v long, n int",
+        lambda k: [(k, None, None), (k, big, 2**31 - 1)],
+    )
+    assert sorted(out.collect(), key=lambda r: r["v"] or 0) == [
+        ("a", None, None), ("a", big, 2**31 - 1)
+    ]
 
 
 # ------------------------------------------------------------- resize

@@ -1,11 +1,14 @@
 """Per-session work happens once per session: a plan compiled once is
 not compiled again while its classes fit the generated-class cache, and
-a table file's schema is inferred once per version of the file."""
+a table file's schema is inferred once per version of the file. Stage
+width is decided once, by ``spread``."""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from fundcrawler_spark import entry_queries
+from fundcrawler_spark.session import spread
 
 N_PLANS = 150  # above Spark's default 100-entry generated-class cache
 
@@ -59,3 +62,31 @@ def test_table_schema_inferred_once_per_file_version(spark, tmp_path):
     assert _jobs(spark, "schema-rewritten") >= 1
     assert third.columns == ["a", "b", "c"]
     assert [tuple(r) for r in third.collect()] == [(4, "w", 1.5)]
+
+
+def test_spread_width_is_one_partition_per_core(spark):
+    cores = spark.sparkContext.defaultParallelism
+    df = spark.range(100)
+    assert spread(df, "id").rdd.getNumPartitions() == cores
+
+
+def test_spread_width_is_capped_by_rows(spark):
+    cores = spark.sparkContext.defaultParallelism
+    df = spark.range(100)
+    for rows in (1, 3, cores - 1, cores, cores + 5):
+        assert spread(df, "id", rows=rows).rdd.getNumPartitions() == min(cores, rows)
+    assert spread(df, "id", rows=0).rdd.getNumPartitions() == 1
+
+
+def test_spread_keeps_equal_keys_together(spark):
+    df = spark.range(200).select((F.col("id") % 7).alias("k"), "id")
+    parts = (
+        spread(df, "k")
+        .select("k", F.spark_partition_id().alias("p"))
+        .distinct()
+        .groupBy("k")
+        .count()
+        .collect()
+    )
+    assert len(parts) == 7
+    assert all(r["count"] == 1 for r in parts)
